@@ -1,6 +1,6 @@
 package graft.lake
 
-import java.io.{InputStream, OutputStream}
+import java.io.{FileNotFoundException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -103,11 +103,11 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     * body-less HEAD as JSON (always raises); here properties round-trip
     * from the sidecar. */
   def getFilesystemProperties(filesystem: String): Map[String, String] =
-    readProps(fsRoot(filesystem))
+    readProps(propsPath(fsRoot(filesystem)))
 
   /** set_properties_filesystem — client.py:308-325 (x-ms-properties). */
   def setFilesystemProperties(filesystem: String, properties: Map[String, String]): Unit =
-    writeProps(fsRoot(filesystem), properties)
+    writeProps(propsPath(fsRoot(filesystem)), properties)
 
   // -- path lifecycle: reference #6-#11 -----------------------------------
 
@@ -132,15 +132,16 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     val src = resolve(filesystem, source)
     // missing source -> false, mirroring the reference's explicit
     // pre-check (client.py:377-384); some FileSystem impls throw instead
-    if (!fs.exists(src)) return false
-    val isDir = fs.getFileStatus(src).isDirectory
+    val isDir = statusOf(src) match {
+      case Some(st) => st.isDirectory
+      case None => return false
+    }
     val dst = resolve(filesystem, dest)
     // POSIX/HDFS rename semantics: renaming INTO an existing directory
     // lands the source at dst/<srcName> — the sidecar must follow the
     // file's ACTUAL landing spot, not the raw dest argument
     val landed =
-      if (fs.exists(dst) && fs.getFileStatus(dst).isDirectory)
-        new Path(dst, src.getName)
+      if (statusOf(dst).exists(_.isDirectory)) new Path(dst, src.getName)
       else dst
     val ok = fs.rename(src, dst)
     // Properties travel with the path, as in ADLS. A directory's sidecar
@@ -164,7 +165,7 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     * sidecar lives inside it and is removed by the recursive delete. */
   def deletePath(filesystem: String, path: String, recursive: Boolean = false): Boolean = {
     val p = resolve(filesystem, path)
-    val isDir = fs.exists(p) && fs.getFileStatus(p).isDirectory
+    val isDir = statusOf(p).exists(_.isDirectory)
     val ok =
       if (isDir && !recursive) {
         // a directory's props sidecar lives INSIDE it and is hidden from
@@ -191,7 +192,7 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   /** get_properties_path action=getStatus — client.py:424-447. */
   def pathStatus(filesystem: String, path: String): Option[PathInfo] = {
     val p = resolve(filesystem, path)
-    if (fs.exists(p)) Some(PathInfo.of(fs.getFileStatus(p), readProps(p))) else None
+    statusOf(p).map(st => PathInfo.of(st, readProps(propsPath(p, st.isDirectory))))
   }
 
   /** get_properties_path action=getAccessControl — client.py:429-438.
@@ -315,15 +316,14 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   // -- data plane: reference #12-#16 --------------------------------------
 
   /** read_path — client.py:528-546 (`Range: bytes=0-`). Whole object. */
-  def readBytes(filesystem: String, path: String): Array[Byte] = {
-    val in = fs.open(resolve(filesystem, path))
-    try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    finally in.close()
-  }
+  def readBytes(filesystem: String, path: String): Array[Byte] =
+    readAll(resolve(filesystem, path))
 
   /** Ranged read — the `Range: bytes=o-` form Parquet column-chunk reads
     * use (SURVEY.md §3.3): seek + bounded read via FSDataInputStream. */
   def readRange(filesystem: String, path: String, offset: Long, length: Int): Array[Byte] = {
+    require(offset >= 0, s"readRange: offset ($offset) must be >= 0")
+    require(length >= 0, s"readRange: length ($length) must be >= 0")
     val in = fs.open(resolve(filesystem, path))
     try {
       val buf = new Array[Byte](length)
@@ -392,8 +392,9 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   def setPathProperties(filesystem: String, path: String,
                         properties: Map[String, String]): Unit = {
     val p = resolve(filesystem, path)
-    require(fs.exists(p), s"setPathProperties: no such path: $path")
-    writeProps(p, properties)
+    val st = statusOf(p)
+    require(st.nonEmpty, s"setPathProperties: no such path: $path")
+    writeProps(propsPath(p, st.get.isDirectory), properties)
   }
 
   /** update_path action=setAccessControl — client.py:587-588 with the
@@ -454,7 +455,7 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   }
 
   def getPathProperties(filesystem: String, path: String): Map[String, String] =
-    readProps(resolve(filesystem, path))
+    readProps(propsPath(resolve(filesystem, path)))
 
   // -- DataFrame surface (BASELINE.json `spark_approach`) -----------------
 
@@ -760,11 +761,27 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   private def fileSidecar(p: Path): Path =
     new Path(p.getParent, s".${p.getName}$PropsSuffix")
 
-  private def propsPath(p: Path): Path =
-    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) new Path(p, PropsFileName)
-    else fileSidecar(p)
+  private def propsPath(p: Path, isDirectory: Boolean): Path =
+    if (isDirectory) new Path(p, PropsFileName) else fileSidecar(p)
 
-  private def writeProps(p: Path, props: Map[String, String]): Unit = {
+  private def propsPath(p: Path): Path = propsPath(p, statusOf(p).exists(_.isDirectory))
+
+  /** One status probe: None for a missing path. On ABFS every probe is an
+    * HTTP HEAD, so an `exists` before a `getFileStatus` costs a round trip. */
+  private def statusOf(p: Path): Option[FileStatus] =
+    try Some(fs.getFileStatus(p))
+    catch { case _: FileNotFoundException => None }
+
+  /** Bulk read of a whole object. Hadoop's `IOUtils.readFullyToByteArray`
+    * reads it one byte at a time. */
+  private def readAll(p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes()
+    finally in.close()
+  }
+
+  /** Writes the sidecar at `pp`, a [[propsPath]]. */
+  private def writeProps(pp: Path, props: Map[String, String]): Unit = {
     // keys are stored bare in the comma/equals-joined sidecar line
     // (values are base64) — a ',' or '=' in a key would write fine and
     // then poison EVERY later read with a parse error; validate like
@@ -773,20 +790,15 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
       require(k.nonEmpty && !k.exists(c => c == ',' || c == '=' || c == '\n'),
         s"property key must be non-empty and contain no ',', '=' or newline: '$k'")
     }
-    val out = fs.create(propsPath(p), true)
+    val out = fs.create(pp, true)
     try out.write(encodeProps(props).getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  private def readProps(p: Path): Map[String, String] = {
-    val pp = propsPath(p)
-    if (!fs.exists(pp)) Map.empty
-    else decodeProps(new String({
-      val in = fs.open(pp)
-      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      finally in.close()
-    }, StandardCharsets.UTF_8))
-  }
+  /** Reads the sidecar at `pp`, a [[propsPath]]; no sidecar, no properties. */
+  private def readProps(pp: Path): Map[String, String] =
+    try decodeProps(new String(readAll(pp), StandardCharsets.UTF_8))
+    catch { case _: FileNotFoundException => Map.empty }
 
   private def copyStream(in: InputStream, out: OutputStream, chunkSize: Int): Long = {
     val buf = new Array[Byte](chunkSize)
@@ -895,12 +907,20 @@ object LakeClient {
     }.toMap
 
   /** Local client rooted at a directory (tests; any Hadoop URI works).
-    * Uses the RAW local filesystem: the checksummed wrapper neither
-    * supports append nor keeps its .crc sidecars consistent across
-    * renames, and ABFS (the production target) is not checksummed. */
+    * Uses a raw, unchecksummed local filesystem: the checksummed wrapper
+    * neither supports append nor keeps its .crc sidecars consistent
+    * across renames, and ABFS (the production target) is not checksummed.
+    *
+    * That filesystem is [[NioLocalFileSystem]], not Hadoop's
+    * `RawLocalFileSystem`. Without the native libhadoop, the latter starts
+    * a `chmod` process on every create and an `ls -ld` on every owner or
+    * permission read, which made those lake calls ten times slower than
+    * the rest. Whole-object reads, on any filesystem, use the stream's
+    * bulk `readAllBytes`: Hadoop's `IOUtils.readFullyToByteArray` reads
+    * one byte at a time. */
   def local(rootDir: String): LakeClient = {
-    val conf = new Configuration()
-    val fs = FileSystem.getLocal(conf).getRawFileSystem
+    val fs = new NioLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), new Configuration())
     new LakeClient(fs, new Path(s"file://$rootDir"))
   }
 

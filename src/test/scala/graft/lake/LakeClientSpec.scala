@@ -1,6 +1,7 @@
 package graft.lake
 
 import java.nio.file.Files
+import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermissions}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -106,6 +107,20 @@ class LakeClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(new String(client.readRange("data", "f.txt", 4, 5), "UTF-8") == "quick")
     // range past EOF returns the available suffix
     assert(new String(client.readRange("data", "f.txt", 40, 100), "UTF-8") == "dog")
+    assert(client.readRange("data", "f.txt", 4, 0).isEmpty)
+    // a negative range is refused by name, not by the array or the seek
+    val negLength = intercept[IllegalArgumentException] { client.readRange("data", "f.txt", 0, -1) }
+    assert(negLength.getMessage.contains("length"))
+    val negOffset = intercept[IllegalArgumentException] { client.readRange("data", "f.txt", -1, 5) }
+    assert(negOffset.getMessage.contains("offset"))
+    // whole-object reads: empty, and larger than one upload chunk
+    val rnd = new scala.util.Random(7)
+    for (size <- Seq(0, 2 * client.ChunkSize + 17)) {
+      val data = new Array[Byte](size); rnd.nextBytes(data)
+      client.uploadBytes("data", "big.bin", data)
+      assert(client.readBytes("data", "big.bin").sameElements(data))
+      assert(client.readRange("data", "big.bin", size / 2, size).sameElements(data.drop(size / 2)))
+    }
     client.deleteFilesystem("data")
   }
 
@@ -175,8 +190,18 @@ class LakeClientSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("acl/status degrade gracefully off-Azure") {
     client.createFilesystem("acl")
     client.uploadString("acl", "f.txt", "x")
+    client.createPath("acl", "d", directory = true)
     val acl = client.aclStatus("acl", "f.txt")
     assert(acl.contains("permissions"))
+    // owner, group and permission bits are the operating system's own
+    for (path <- Seq("f.txt", "d")) {
+      val posix = Files.readAttributes(rootDir.resolve(s"acl/$path"), classOf[PosixFileAttributes])
+      val expected = Map("owner" -> posix.owner.getName, "group" -> posix.group.getName,
+        "permissions" -> PosixFilePermissions.toString(posix.permissions))
+      assert(client.aclStatus("acl", path) == expected)
+      val st = client.pathStatus("acl", path).get
+      assert(Map("owner" -> st.owner, "group" -> st.group, "permissions" -> st.permissions) == expected)
+    }
     client.deleteFilesystem("acl")
   }
 
@@ -195,6 +220,19 @@ class LakeClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     val viaAcl = client.setAccessControl("acl", "guarded.txt",
       acl = Some("user::rwx,group::r--,other::---"))
     assert(viaAcl("permissions") == "rwxr-----")
+    // the sticky bit survives the round trip
+    client.createPath("acl", "shared", directory = true)
+    client.setAccessControl("acl", "shared", permission = Some("1750"))
+    assert(client.aclStatus("acl", "shared")("permissions") == "rwxr-x--T")
+    assert(Files.getAttribute(rootDir.resolve("acl/shared"), "unix:mode").asInstanceOf[Int] % 4096 ==
+      Integer.parseInt("1750", 8))
+    // owner and group: set to the file's own, the change any user may make
+    val posix = Files.readAttributes(rootDir.resolve("acl/guarded.txt"), classOf[PosixFileAttributes])
+    val owned = client.setAccessControl("acl", "guarded.txt",
+      owner = Some(posix.owner.getName), group = Some(posix.group.getName))
+    assert(owned("owner") == posix.owner.getName && owned("group") == posix.group.getName)
+    assert(client.setAccessControl("acl", "guarded.txt", group = Some(posix.group.getName))("group") ==
+      posix.group.getName)
     // missing path fails loudly
     intercept[IllegalArgumentException] {
       client.setAccessControl("acl", "nope.txt", permission = Some("644"))
