@@ -19,7 +19,18 @@ import graft.tables.Tables
   * their scale shapes (hash-key shuffles, df-capped inverted index,
   * bucket joins); nothing here adds a new shuffle. Returns the cleaned
   * corpus plus a per-stage row-count audit — the numbers a data lead
-  * asks for first. */
+  * asks for first.
+  *
+  * Shared work is persisted explicitly, never left to exchange reuse:
+  * every scan of a persisted frame is its own `TableCacheQueryStageExec`
+  * under AQE, and those canonicalize by stage id, so no exchange above
+  * the persisted `exact` frame is ever reused (the trap documented at
+  * `Dedup.cachedKeptShingles`). A pair graph built straight over
+  * `exact` (public `dd4From`) would run the whole kept-shingle pipeline
+  * — tokenize, 3-shingle, explode, df-cutoff aggregate — once per scan
+  * of the shingle frame, four times per clean; the near-dup step
+  * therefore builds the kept-shingle frame once, persists it, and drops
+  * it as soon as the representatives are materialized. */
 object CorpusPipeline {
 
   final case class Stats(input: Long, afterExact: Long, afterNearDup: Long,
@@ -42,17 +53,23 @@ object CorpusPipeline {
       .persist(Disk)
     val nExact = exact.count()
 
-    // 2. near-dup: cluster the survivors, keep representatives. The
-    // explicit-count dd4 overload: nExact is already in hand, and the
+    // 2. near-dup: cluster the survivors, keep representatives. The df
+    // cutoff takes the explicit count: nExact is already in hand, and the
     // plan-statistics route would re-trip the statsCache trap on the
-    // freshly-persisted-unmaterialized `exact` frame it exists to avoid.
+    // freshly-persisted `exact` frame. The kept-shingle frame is persisted
+    // because the pair graph scans it four times (both self-join sides,
+    // and the per-doc sizes joined onto each end of a pair) — see the
+    // header for why that reuse cannot come from AQE.
+    val kept = Dedup.keptShingles(Dedup.withShingles(exact), Dedup.shingleDfCap(nExact))
+      .persist(Disk)
     val clusters = Dedup.dd6ClusterFrom(
       exact.select(col("doc_id")),
-      Dedup.dd4From(exact, nExact).select(col("doc_a"), col("doc_b")))
+      Dedup.jaccardPairs(kept).select(col("doc_a"), col("doc_b")))
     val reps = exact.join(
       clusters.where(col("keep")).select(col("doc_id")), Seq("doc_id"), "left_semi")
       .persist(Disk)
     val nNearDup = reps.count()
+    kept.unpersist(false)
 
     // 3. quality floor — ta2's composite score, same rounding, so a
     // threshold means the same thing in analysis and filtering. Persisted

@@ -658,7 +658,15 @@ object Dedup {
   def dd4From(docs: DataFrame, nDocs: Long): DataFrame =
     dd4FromKept(keptShingles(withShingles(docs), shingleDfCap(nDocs)))
 
-  private def dd4FromKept(kept: DataFrame): DataFrame = {
+  private def dd4FromKept(kept: DataFrame): DataFrame =
+    jaccardPairs(kept).orderBy(col("doc_a"), col("doc_b"))
+
+  /** dd4's (doc_a, doc_b, jaccard) pairs over a kept-shingle frame, in no
+    * particular order — the form for callers that consume the graph
+    * rather than return it ([[CorpusPipeline.clean]] persists it for the
+    * CC loop, where the public entries' `orderBy` would only add a
+    * range-partition sampling job and a sort inside the cached plan). */
+  private[operators] def jaccardPairs(kept: DataFrame): DataFrame = {
     val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val pairs = kept.as("x").join(kept.as("y"),
         col("x.sh") === col("y.sh") && col("x.doc_id") < col("y.doc_id"))
@@ -675,7 +683,6 @@ object Dedup {
         jaccardAtLeast08(col("common"), col("un")))
       .withColumn("jaccard", round(col("common") / col("un"), 4))
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** dd5_simhash — 64-bit SimHash per document + near-dup pairs within
@@ -954,6 +961,15 @@ object Dedup {
     * reuses, 2× the shuffle; over a checkpointed source = 1 reuse,
     * exactly half the shuffle — ReuseProbe).
     *
+    * The same trap holds for EVERY persisted frame, not just this memo:
+    * a plan built over a `persist()`ed source recomputes each exchange
+    * above it once per scan. [[CorpusPipeline.clean]] meets it on its
+    * persisted `exact` frame, where dd4 over `exact` would run the
+    * kept-shingle map stage and its df-cutoff reduce four times per
+    * clean; the pipeline persists the kept-shingle frame itself instead
+    * (with `persist`, not `localCheckpoint`, so its blocks stay
+    * replayable on executor loss).
+    *
     * Trade (documented, accepted): checkpoint blocks are
     * NON-REPLAYABLE — on a cluster, losing an executor mid-query fails
     * the query instead of recomputing the lost partitions (local mode:
@@ -1063,10 +1079,8 @@ object Dedup {
         // billions of static rows at 100 TB for nothing — the loop's
         // working set is the (far smaller) node set of the pair graph;
         // untouched docs union back in as singletons at the end.
-        val touched = edges.select(col("u").as("doc_id")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        labels = touched.select(col("doc_id"), col("doc_id").as("label"))
-        // the checkpointed frame backing `labels` (carries the per-round
+        //
+        // The checkpointed frame backing `labels` (carries the per-round
         // `chg` flag); tracked separately so releaseSuperseded sees the
         // LogicalRDD root, not the slimming Project above it
         var labelsCk: DataFrame = null
@@ -1075,23 +1089,35 @@ object Dedup {
         var iters = 0
         var prevChanged = Long.MaxValue
         while (!converged && !stalled && iters < FastLabelRounds) {
-          // ONE job per round (round 17 — the converge-count fold): the
-          // old label rides the same aggregation as the new one (every
-          // doc_id has exactly one `own` row, so min(when(own,label)) IS
-          // last round's label), the checkpoint is LAZY, and the changed-
-          // count action both materializes the checkpoint blocks and
-          // returns the count — replacing the separate join(next, labels)
-          // + count job (2 exchanges + a hash join per round, and at
-          // 100 TB a full extra stage barrier per round).
-          val prop = edges.join(labels, edges("u") === labels("doc_id"))
-            .select(col("v").as("doc_id"), col("label"), lit(false).as("own"))
-          val next = labels.select(col("doc_id"), col("label"), lit(true).as("own"))
-            .union(prop)
-            .groupBy(col("doc_id"))
-            .agg(min(col("label")).as("label"),
-              min(when(col("own"), col("label"))).as("old"))
+          // Round 1 runs straight off the edges: every label still equals
+          // its doc_id, so a node's new label is min(itself, neighbors) —
+          // one aggregation over the symmetric edge set, whose `u` values
+          // ARE the touched nodes (no seed frame, no join). Later rounds
+          // carry the old label through the same aggregation as the new
+          // one (every doc_id has exactly one `own` row, so
+          // min(when(own,label)) IS last round's label), which spares a
+          // join(next, labels) per round for the changed count.
+          //
+          // Each round is TWO SQL executions under AQE: the lazy
+          // `localCheckpoint(false)` still plans the adaptive query, which
+          // runs every shuffle stage of the round to obtain its final RDD;
+          // the changed-count action then runs the round's final stage,
+          // which writes the checkpoint blocks, plus its own count
+          // aggregation.
+          val next = (if (labelsCk == null) edges.groupBy(col("u"))
+              .agg(least(col("u"), min(col("v"))).as("label"))
+              .select(col("u").as("doc_id"), col("label"), col("u").as("old"))
+            else {
+              val prop = edges.join(labels, edges("u") === labels("doc_id"))
+                .select(col("v").as("doc_id"), col("label"), lit(false).as("own"))
+              labels.select(col("doc_id"), col("label"), lit(true).as("own"))
+                .union(prop)
+                .groupBy(col("doc_id"))
+                .agg(min(col("label")).as("label"),
+                  min(when(col("own"), col("label"))).as("old"))
+            })
             .withColumn("chg", col("label") =!= col("old"))
-            .localCheckpoint(false) // lazy: the count below materializes it
+            .localCheckpoint(false)
           val changed = next.where(col("chg")).count()
           if (labelsCk != null) releaseSuperseded(labelsCk)
           labelsCk = next
@@ -1105,7 +1131,6 @@ object Dedup {
           stalled = !converged && iters >= 3 && changed > prevChanged / 2
           prevChanged = changed
         }
-        touched.unpersist(false)
         ccPath.set(
           if (converged) s"fast:$iters"
           else if (stalled) s"star-early:$iters" else s"star-budget:$iters")
@@ -1210,8 +1235,10 @@ object Dedup {
       .select(col("u"), least(col("u"), col("mv")).as("m"))
     // LAZY checkpoints throughout (round 17): the per-round action that
     // already scans every partition — count here, the signature agg in
-    // the loop — doubles as the checkpoint materialization, so each
-    // round runs one job instead of two (materialize + signature).
+    // the loop — doubles as the checkpoint materialization, so no job
+    // only writes checkpoint blocks. Under AQE taking the lazy
+    // checkpoint still runs the round's shuffle stages (its own SQL
+    // execution); the action runs the final stage after it.
     var cur = canonical(edges).localCheckpoint(false)
     var sig = (cur.count(), 0L)
     var rounds = 0

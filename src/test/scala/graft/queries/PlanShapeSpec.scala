@@ -108,34 +108,8 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // from optimizer statistics (file bytes), not an eager e.count() scan.
     // A plain parquet read launches one tiny schema-inference job (footer
     // read); ss5 construction must add NOTHING on top of that baseline.
-    def jobsDuring(body: => Unit): Int = {
-      // Listener delivery is async but ORDERED: run a marker job after the
-      // body and wait for its start event — once seen, every job start the
-      // body triggered has been delivered. No timing-dependent sleeps.
-      val marker = s"plan-shape-marker-${System.nanoTime()}"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val markerSeen = new java.util.concurrent.CountDownLatch(1)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(js.properties)
-              .exists(_.getProperty("spark.job.description") == marker))
-            markerSeen.countDown()
-          else jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        spark.sparkContext.setJobDescription(marker)
-        try spark.sparkContext.parallelize(Seq(1), 1).count()
-        finally spark.sparkContext.setJobDescription(null)
-        assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
-          "marker job start event not delivered")
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
-    val baseline = jobsDuring(graft.tables.Tables.embeddings(spark, dir))
-    val ss5 = jobsDuring(graft.operators.Similarity.ss5KnnJoin(spark, dir))
+    val baseline = graft.JobCount.during(spark)(graft.tables.Tables.embeddings(spark, dir))
+    val ss5 = graft.JobCount.during(spark)(graft.operators.Similarity.ss5KnnJoin(spark, dir))
     assert(ss5 <= baseline,
       s"building ss5 launched $ss5 job(s) vs $baseline for a bare table read — " +
         "the size probe must not scan the corpus")
