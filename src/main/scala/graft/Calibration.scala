@@ -172,7 +172,7 @@ object Calibration {
 
   /** One-sample box-state stamp for per-stage lines: cpu probe + host
     * load, the pair every cross-state adjudication needs (VERDICT r12
-    * #6 — the load reading existed only as a manual CalProbe run). */
+    * #6 — the load reading existed only as a separate manual run). */
   def stamp(): String = f"cal=${calCpu()}%.2f load=${hostLoad()}%.1f"
 
   /** JSON string literal (same escaping Bench has always used). */

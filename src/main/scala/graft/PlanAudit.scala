@@ -54,8 +54,8 @@ object PlanAudit {
     }
     println(s"\nflagged: $flagged")
     spark.stop()
-    // the sibling mains' discipline (ScaleSmoke/StreamStateBench): a
-    // scripted invocation gating on exit status must see the flag
+    // ScaleSmoke's discipline: a scripted invocation gating on exit
+    // status must see the flag
     if (flagged > 0) sys.exit(1)
   }
 }

@@ -20,13 +20,64 @@ object ScaleSmoke {
   case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                 event_type: String, value: Double)
 
+  /** The replica document corpus: each fixture doc replicated with a
+    * perturbing suffix token, so near-dup structure is realistic
+    * `replicas`-cliques, not exact copies. Persisted; NOT counted. */
+  private def replicaDocs(spark: SparkSession, sfDir: String, replicas: Int): DataFrame = {
+    val r = explode(sequence(lit(0), lit(replicas - 1)))
+    graft.tables.Tables.documents(spark, sfDir)
+      .withColumn("r", r)
+      .select((col("doc_id") * replicas + col("r")).as("doc_id"),
+        concat(col("text"), lit(" replicatoken"), col("r")).as("text"))
+      .persist()
+  }
+
+  /** The replica embedding corpus: vectors replicated UNPERTURBED —
+    * replica top-k structure is exact duplicates (easy for any
+    * geometry; the recall DIFFERENCES live in the fixture spec's
+    * moderate-cosine sweep). Persisted. */
+  private def replicaEmbeddings(spark: SparkSession, sfDir: String, replicas: Int): DataFrame = {
+    val r = explode(sequence(lit(0), lit(replicas - 1)))
+    graft.tables.Tables.embeddings(spark, sfDir)
+      .withColumn("r", r)
+      .select((col("vec_id") * replicas + col("r")).as("vec_id"), col("embedding"))
+      .persist()
+  }
+
+  /** Rows in the adversarial skew corpus (~2M: big enough that a
+    * single-task hot-key shape visibly staggers at local[32]). */
+  private val AdversarialRows = 2000000L
+
+  /** The round-11 adversarial hot-key corpus, the workload whose
+    * window vs agg+join Dedup forms NOTES.md "Round-11 measurement
+    * records" measured (the skew wall bars are ~4× those times):
+    * single degenerate keys carry a constant fraction of the rows —
+    *   - 5 % verbatim mega-copies of one text: one mega content-hash
+    *     group (dd2) and one mega identical-SimHash group (dd5 stars);
+    *   - 5 % near-empty two-token docs: degenerate 16-bit SimHash
+    *     chunks with thousands of DISTINCT sigs (dd5 dsz path) and
+    *     degenerate MinHash band buckets (dd3 segmented chains);
+    *   - 90 % unique bodies sharing a verbatim boilerplate tail:
+    *     stop-shingles with df ≈ 0.9·n (the keptShingles df cutoff). */
+  private def adversarialCorpus(spark: SparkSession, n: Long): DataFrame =
+    spark.range(n).select(col("id").as("doc_id"),
+      when(col("id") % 20 === 0,
+        lit("mega duplicate document body held verbatim every copy identical"))
+      .when(col("id") % 20 === 1, concat(lit("x t"), col("id")))
+      .otherwise(concat(lit("unique body "), col("id"),
+        lit(" trailing boiler plate of the and in to be")))
+      .as("text"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val replicas = args.lift(1).map(_.toInt).getOrElse(20)
-    val cpus = graft.ProbeHarness.cpus
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // one source of session truth: same AQE/UTC/extensions/legacy-ts
     // config as the engine proper (hand-rolled conf here diverged)
-    val spark = graft.ProbeHarness.session("scale-smoke")
+    val spark = graft.core.GraftSession
+      .builder("scale-smoke", s"local[$cpus]", cpus)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
 
     // every smoke line is also collected and self-persisted repo-side
     // at exit (round 12): the driver's output-tail capture has
@@ -63,7 +114,8 @@ object ScaleSmoke {
     // then carries its own calCpu so a contended stage reading is
     // adjudicable from the artifact without an isolated rerun
     // (VERDICT r11 #5 — the 100× records swung up to 4× with
-    // co-tenancy and each needed a manual GateProbe rerun).
+    // co-tenancy and each needed an isolated rerun; NOTES.md "Round-12
+    // measurement records").
     println(f"cal: start cpu=${Calibration.cal3(Calibration.calCpu _)}%.2f " +
       f"mt=${Calibration.cal3(() => Calibration.calCpuMt())}%.2f " +
       f"mem=${Calibration.cal3(() => Calibration.calMemMt())}%.2f " +
@@ -73,8 +125,8 @@ object ScaleSmoke {
       "full-width compute/DRAM-bandwidth bursts — elevated at LOW load " +
       "means a slower box on that axis, at HIGH load a co-tenant)")
 
-    val docs = graft.ProbeHarness.replicaDocs(spark, sfDir, replicas)
-    val embs = graft.ProbeHarness.replicaEmbeddings(spark, sfDir, replicas)
+    val docs = replicaDocs(spark, sfDir, replicas)
+    val embs = replicaEmbeddings(spark, sfDir, replicas)
     val nDocs = docs.count()
     val nVecs = embs.count()
     println(s"scale-smoke: $nDocs docs, $nVecs vectors (x$replicas)")
@@ -235,8 +287,9 @@ object ScaleSmoke {
       // state must be O(in-band rows per batch), never O(total events).
       // State store = the engine default (GraftSession): RocksDB with
       // changelog checkpointing — measured 254 s vs 372 s HDFS-backed on
-      // the 2M-event band join (StreamStateBench), and the only provider
-      // whose state can exceed executor heap at production scale.
+      // the 2M-event band join (NOTES.md "Round-10 changes" item 5), and
+      // the only provider whose state can exceed executor heap at
+      // production scale.
       timed(s"stream sessions x$replicas") {
         val in = MemoryStream[Ev]
         val q = graft.streaming.EventStreams
@@ -303,9 +356,9 @@ object ScaleSmoke {
         assert(late <= early * 2,
           s"join state grew: early max $early, late max $late — not watermark-bounded")
         // measured plateau is exactly 2×perBatch (both sides' current
-        // in-band batch, previous batch fully evicted — StreamStateBench
-        // peak 100000 at perBatch=50000); 3× bound = measured + headroom,
-        // tightened from the pre-measurement 6×
+        // in-band batch, previous batch fully evicted — peak 100000 at
+        // perBatch=50000, NOTES.md "Round-10 changes" item 5); 3× bound =
+        // measured + headroom, tightened from the pre-measurement 6×
         assert(states.max <= 3L * perBatch,
           s"state ${states.max} rows is not O(in-band rows) for $perBatch/side batches")
         println(f"  join state peak ${states.max}%d rows (bound ${3L * perBatch}%d) " +
@@ -565,8 +618,8 @@ object ScaleSmoke {
     // (NOTES) — a regression back to a single-task hot-key shape fails
     // the bar instead of silently staggering.
     locally {
-      val nAdv = graft.SkewCorpus.DefaultRows
-      val adv = graft.SkewCorpus.adversarial(spark, nAdv)
+      val nAdv = AdversarialRows
+      val adv = adversarialCorpus(spark, nAdv)
       def barred(name: String, barSec: Double)(body: => Long): Unit = {
         // the bars are quiet-box absolutes (~4× measured round-11 wall);
         // on a loaded or slower box they false-fail, so scale each by
@@ -697,9 +750,10 @@ object ScaleSmoke {
       // feasible tier lifts that (recall .75 at cos .4 needs ~350
       // tables). The op's contract is NEAR-DUP detection: at cos ≥ .99
       // the same formula gives ≥ .96 for ANY qualifying pair, so that
-      // band takes the hard bar (measured 1.000 at 20×, BandRecallProbe:
-      // marginal bands .10/.14, zero truth mass in [.5,.99), replica
-      // band 5430/5430); raw threshold recall prints informationally.
+      // band takes the hard bar (measured 1.000 at 20×, NOTES.md
+      // "Round-12 changes" item 4: marginal bands .10/.14, zero truth
+      // mass in [.5,.99), replica band 5430/5430); raw threshold recall
+      // prints informationally.
       locally {
         val t0 = System.nanoTime()
         // released in finally (ADVICE r12): a throw between persist and the

@@ -106,11 +106,11 @@ object GraftSession {
       // in-heap map: at 100 TB a stream-stream join's state must spill
       // past executor heap, which the HDFS-backed provider structurally
       // cannot (state = a JVM HashMap per partition). Also measured
-      // faster where it matters (StreamStateBench, 2M-event band join,
-      // local[32]): RocksDB+changelog 254 s vs HDFS 372 s at the 1 h
-      // watermark, 197 s vs 270 s at 10 min. Changelog checkpointing
-      // uploads per-batch change deltas instead of full SST snapshots —
-      // the production durability shape for high-churn state.
+      // faster where it matters (NOTES.md "Round-10 changes" item 5,
+      // 2M-event band join, local[32]): RocksDB+changelog 254 s vs HDFS
+      // 372 s at the 1 h watermark, 197 s vs 270 s at 10 min. Changelog
+      // checkpointing uploads per-batch change deltas instead of full SST
+      // snapshots — the production durability shape for high-churn state.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",

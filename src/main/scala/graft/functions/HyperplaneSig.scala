@@ -20,10 +20,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * signature from 64 independent `vec_dot`-vs-literal columns folded
   * through when/add/shiftleft/or — ONE unsplittable expression tree
   * whose generated code ran at ~100 µs per dot (~1000× the fused-loop
-  * cost; SigMicroProbe: 13-17 s of task CPU for 2000 rows × 64 planes,
-  * identical with `-XX:-DontCompileHugeMethods`, 4× FASTER with
-  * whole-stage codegen disabled — the monster method defeats the JIT
-  * and every warm ss2/ss5 run re-paid 10-16 s of HotSpot recompilation).
+  * cost; OPTIMIZATION_r17.md "Change 2": 13-17 s of task CPU for 2000
+  * rows × 64 planes, identical with `-XX:-DontCompileHugeMethods`, 4×
+  * FASTER with whole-stage codegen disabled — the monster method
+  * defeats the JIT and every warm ss2/ss5 run re-paid 10-16 s of
+  * HotSpot recompilation).
   * The matrix rides as a plan REFERENCE OBJECT (flat row-major float[],
   * the [[TopCells]] discipline) and the hot loop is plain JVM code in
   * [[HyperplaneSigOps]] — tables×bits×dim fused multiply-adds per row,

@@ -959,7 +959,8 @@ object Dedup {
     * canonicalizes by RDD identity, so the exchanges above it match and
     * AQE reuses them (probe: self-join over a persisted source = 0
     * reuses, 2× the shuffle; over a checkpointed source = 1 reuse,
-    * exactly half the shuffle — ReuseProbe).
+    * exactly half the shuffle — OPTIMIZATION_r16.md "Change 1",
+    * root cause).
     *
     * The same trap holds for EVERY persisted frame, not just this memo:
     * a plan built over a `persist()`ed source recomputes each exchange
@@ -1165,7 +1166,7 @@ object Dedup {
     * (caller-asserted high diameter). Thread-local so parallel suites
     * cannot race it; observational only — never read by the operators
     * themselves. */
-  private[graft] val ccPath = new ThreadLocal[String]
+  private[operators] val ccPath = new ThreadLocal[String]
 
   /** Default round budget for [[starComponents]]. The PROVEN bound for
     * alternating star contraction is O(log² n) rounds (Kiveris et al.,

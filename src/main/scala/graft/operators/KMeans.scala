@@ -175,8 +175,8 @@ object KMeans {
 
   /** [[assignTopCells]] with explicit centroid norms (the seeded ss4
     * variant scores raw dot/|e|, i.e. norms forced to 1.0). */
-  private[graft] def assignTopCellsWith(e: DataFrame, centroids: Seq[Array[Float]],
-                                        nProbe: Int, cnorms: Seq[Double]): DataFrame = {
+  private[operators] def assignTopCellsWith(e: DataFrame, centroids: Seq[Array[Float]],
+                                            nProbe: Int, cnorms: Seq[Double]): DataFrame = {
     require(nProbe >= 1, "assignTopCells: nProbe must be >= 1")
     VectorFunctions.ensureRegistered(e.sparkSession)
     require(centroids.forall(c => c.exists(_ != 0f)),

@@ -396,7 +396,7 @@ object Similarity {
     else if (cells <= 1024) 48
     else 96
 
-  private[graft] def ivfCellsFor(e: DataFrame): Int =
+  private def ivfCellsFor(e: DataFrame): Int =
     IvfCellTiers.find(estRowsOf(e) < _._1).getOrElse(IvfCellTiers.last)._2
 
   /** Floor for the IVF cell-population cap: caps below this never
@@ -415,7 +415,7 @@ object Similarity {
     * bits + a zero-norm pre-filter.) DORMANT at the measured
     * fixture/smoke scales (20× smoke: zero pairs lost); it exists for
     * the adversarial tail, exactly like its siblings. */
-  private[graft] def ivfMaxCellPop(e: DataFrame, cells: Int, nProbe: Int): Long =
+  private def ivfMaxCellPop(e: DataFrame, cells: Int, nProbe: Int): Long =
     math.max(MinIvfCellCap.toLong, 4L * nProbe * (estRowsOf(e) / cells))
 
   /** Multi-probe within-cell verified pair join shared by the seeded
@@ -444,7 +444,7 @@ object Similarity {
     * consumer). The 1-row cross join is the documented q16/ss1
     * broadcast pattern (PlanAudit whitelists it). Shared by
     * [[ivfCellPairs]] and [[knnJoinIvfKernel]]. */
-  private[graft] def capCells(assigned: DataFrame, maxPop: Long): DataFrame = {
+  private[operators] def capCells(assigned: DataFrame, maxPop: Long): DataFrame = {
     val over = assigned.select(explode(col("cells")).as("cell"))
       .groupBy(col("cell")).agg(count(lit(1)).as("pop"))
       .where(col("pop") > maxPop)
@@ -463,8 +463,8 @@ object Similarity {
     * assigned frame's estimate passes through the assignment join /
     * 1-row cross join, where size propagation is garbage.
     *
-    * Why it matters — measured at the 100× probe (Ss5PerfProbe, NOTES
-    * round-13): a 200k-vector index side (~58 MB) is over the 10 MB
+    * Why it matters — measured at 100× (NOTES.md "Round-13 measurement
+    * records"): a 200k-vector index side (~58 MB) is over the 10 MB
     * auto-broadcast threshold, so the cell join planned as a sort-merge
     * join and every one of the ~5G candidate rows paid the SMJ's
     * UnsafeRow output copy of BOTH 256-byte embeddings before the dot
@@ -985,7 +985,7 @@ object Similarity {
     * expression dispatch while staying far under any sane row/buffer
     * limit. Chunk assignment is `xxhash64(nbr_id) mod ceil(pop/chunk)` —
     * deterministic, and balanced whp by the usual balls-in-bins bound. */
-  private[graft] val IvfChunkRows = 4096
+  private[operators] val IvfChunkRows = 4096
 
   /** The IVF kNN join proper, shared by the seeded route and the
     * fitted-centroid variant the spec measures: each query explodes its
@@ -1066,11 +1066,11 @@ object Similarity {
         col("t.score").as("cos"), (col("rk0") + 1).cast("int").as("rk"))
   }
 
-  /** [[knnJoin]] with explicit (tables, bits) — the ScaleSmoke seam for
+  /** [[knnJoin]] with explicit (tables, bits) — the spec seam for
     * measuring an upper [[KnnLshTiers]] geometry's recall before a
     * corpus lands on it (the lshNeardupGeom convention). */
-  private[graft] def knnJoinGeom(e00: DataFrame, k: Int, dim: Int,
-                                 geom: Option[(Int, Int)]): DataFrame = {
+  private[operators] def knnJoinGeom(e00: DataFrame, k: Int, dim: Int,
+                                     geom: Option[(Int, Int)]): DataFrame = {
     // many short tables, not few long ones, at small N: kNN needs recall
     // for moderate-cosine neighbors (p_match = 1-(1-p_bit^bits)^tables,
     // p_bit ~ .6 for cos ~.3) — 16x4 gives ~.9 where 4x8 gives ~.08. At

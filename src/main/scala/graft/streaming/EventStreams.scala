@@ -142,9 +142,10 @@ object EventStreams {
     *
     * The watermark is the deployment's state/latency lever: retention is
     * watermark + band, so tightening it shrinks state AND wall time
-    * roughly linearly (StreamStateBench, 2M events on the engine-default
-    * RocksDB store: 1 h → 254 s / 100k peak state rows; 10 min → 197 s /
-    * 62k). Set it to the pipeline's real late-data tolerance, no wider. */
+    * roughly linearly (NOTES.md "Round-10 changes" item 5, 2M events on
+    * the engine-default RocksDB store: 1 h → 254 s / 100k peak state
+    * rows; 10 min → 197 s / 62k). Set it to the pipeline's real
+    * late-data tolerance, no wider. */
   def streamingStreamJoin(clicks: DataFrame, purchases: DataFrame,
                           watermark: String = "1 hour"): DataFrame = {
     val c = clicks.withWatermark("ts", watermark)
