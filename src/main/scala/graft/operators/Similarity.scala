@@ -595,10 +595,10 @@ object Similarity {
   private[graft] def seededCentroidsForTest(cells: Int, dim: Int): Seq[Array[Float]] =
     seededCentroids(cells, dim)
 
-  /** Seeded IVF with explicit geometry (ScaleSmoke sweeps it; the public
-    * entry binds the tier table + [[IvfNProbe]]). */
-  private[graft] def ss4Seeded(e: DataFrame, cells: Int, nProbe: Int,
-                               dim: Int = 64): DataFrame = {
+  /** Seeded IVF with explicit geometry (the public entry binds the tier
+    * table + [[IvfNProbe]]). */
+  private def ss4Seeded(e: DataFrame, cells: Int, nProbe: Int,
+                        dim: Int): DataFrame = {
     VectorFunctions.ensureRegistered(e.sparkSession)
     // Probe-set assignment keeps the argmax plan split: per-row sorted
     // literal array under the when-chain cap, slim exploded top-n +

@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.VectorFunctions
 
 /** The session factory wires everything a user needs: UTC, extensions
   * (vec_dot/simhash_agg reachable from SQL), ns-timestamp reads, and the
@@ -36,6 +38,28 @@ class GraftSessionSpec extends AnyFunSuite {
         "documents view must carry the balanced() rebalance")
       assert(spark.table("embeddings").rdd.getNumPartitions >= slots,
         "embeddings view must carry the balanced() rebalance")
+    } finally spark.stop()
+  }
+
+  test("ensureRegistered gives a plain SparkSession the graft functions, once") {
+    // the operators call ensureRegistered for users who bring their own
+    // session without GraftExtensions; every other suite runs on the
+    // builder's session, so this is the one test of that path
+    val spark = SparkSession.builder().master("local[2]").getOrCreate()
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      val dot = "SELECT vec_dot(array(1.0F, 2.0F), array(3.0F, 4.0F))"
+      intercept[AnalysisException](spark.sql(dot))
+      VectorFunctions.ensureRegistered(spark)
+      Seq("vec_dot", "simhash_agg", "topk_by_score", "cell_topk", "round3")
+        .foreach(f => assert(spark.catalog.functionExists(f), f))
+      assert(spark.sql(dot).collect()(0).getDouble(0) == 11.0)
+      assert(graft.operators.Similarity.ss1CosineTopk(spark, "/root/testdata/sf0.001")
+        .collect().length == 10)
+      // a second call registers nothing: a user's own round3 survives it
+      spark.udf.register("round3", (x: Double) => -x)
+      VectorFunctions.ensureRegistered(spark)
+      assert(spark.sql("SELECT round3(0.5D)").collect()(0).getDouble(0) == -0.5)
     } finally spark.stop()
   }
 

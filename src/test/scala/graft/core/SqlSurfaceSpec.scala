@@ -1,29 +1,21 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** The pure-SQL face of the engine: GraftSession.registerTables exposes
   * every fixture table as a view and GraftExtensions injects the custom
   * functions, so a user who only speaks `spark.sql(...)` reaches the full
   * surface — relational, window, JSON, and the custom codegen kernels —
   * without touching the DataFrame API. */
-class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SqlSurfaceSpec extends AnyFunSuite with GraftSuite {
 
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
   private val dir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark0 = GraftSession.builder("sql-surface-test", "local[4]", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     GraftSession.registerTables(spark, dir)
   }
-
-  override def afterAll(): Unit = spark0.stop()
 
   test("relational SQL: star join + aggregation over the registered views") {
     val revenue = spark.sql(

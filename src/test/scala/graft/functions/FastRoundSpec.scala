@@ -1,32 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** Ground truth for [[Round3]]: Spark's OWN `round(col, 3)` evaluated
   * through a real plan (codegen path), not a re-derivation of what
   * Spark is believed to do. Randomized similarity-range and
   * wide-exponent inputs plus the k/1000 (±0.0005, ±ulps) boundary
   * lattice must agree BIT-for-bit. */
-class FastRoundSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("fastround-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    VectorFunctions.ensureRegistered(spark)
-  }
-
-  override def afterAll(): Unit = spark0.stop()
+class FastRoundSpec extends AnyFunSuite with GraftSuite {
 
   test("round3 matches Spark round(x, 3) bit-for-bit through a real plan") {
     import spark.implicits._

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** [[HyperplaneSig]] must be BIT-IDENTICAL to the retired per-plane
   * expression form (64 vec_dot-vs-literal columns folded through
@@ -11,23 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   * degenerate paths the retired form defined: NULL embedding, wrong
   * dimension, NULL element, and non-finite values all pack to 0 per the
   * CASE-WHEN-on-NULL/NaN rules, never to NULL. */
-class HyperplaneSigSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[2]")
-      .appName("hyperplane-sig-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = spark0.stop()
+class HyperplaneSigSpec extends AnyFunSuite with GraftSuite {
 
   /** The RETIRED column form, verbatim from the pre-r17 kernel. */
   private def retiredSig(planes: Seq[Seq[Seq[Double]]], stride: Int): Column = {
@@ -70,17 +54,14 @@ class HyperplaneSigSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bit parity with the retired column form: kNN geometry (16x4, stride 4)") {
-    VectorFunctions.ensureRegistered(spark)
     parityCheck(tables = 16, bits = 4, stride = 4)
   }
 
   test("bit parity: pair geometry with underfilled lanes (4x12, stride 16)") {
-    VectorFunctions.ensureRegistered(spark)
     parityCheck(tables = 4, bits = 12, stride = 16)
   }
 
   test("degenerate rows pack to 0 exactly like the retired form") {
-    VectorFunctions.ensureRegistered(spark)
     val dim = 4
     val planes: Seq[Seq[Seq[Double]]] =
       Seq.fill(2, 2, dim)(1.0) // all-ones planes: any positive vector sets bits
@@ -106,7 +87,6 @@ class HyperplaneSigSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("null ELEMENT packs to 0 (interpreted eval path)") {
-    VectorFunctions.ensureRegistered(spark)
     val dim = 3
     val flat = Array.fill(1 * 1 * dim)(1.0f)
     val emb = new org.apache.spark.sql.catalyst.util.GenericArrayData(

@@ -1,30 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** The codegen kernel must agree bit-for-bit with the composable
   * zip_with+aggregate formulation (which the DuckDB oracle mirrors), and
   * behave on nulls/length mismatches. */
-class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[2]")
-      .appName("vec-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = spark0.stop()
+class VectorExpressionsSpec extends AnyFunSuite with GraftSuite {
 
   private def df = {
     import spark.implicits._
@@ -36,7 +19,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("vec_dot matches zip_with+aggregate bit-for-bit") {
-    VectorFunctions.ensureRegistered(spark)
     val composed = graft.operators.Similarity.dot(col("a"), col("b"))
     val rows = df.select(
       VectorFunctions.vecDot(col("a"), col("b")).as("fast"),
@@ -67,7 +49,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("null inputs and length mismatches yield null (codegen + interpreted)") {
-    VectorFunctions.ensureRegistered(spark)
     import spark.implicits._
     val d = Seq(
       (1L, Some(Array(1.0f)), None: Option[Array[Float]]),
@@ -95,7 +76,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a null ELEMENT yields null, not a fabricated 0-element dot (codegen + interpreted)") {
-    VectorFunctions.ensureRegistered(spark)
     import spark.implicits._
     // getFloat on a null array slot silently reads 0.0 — the kernel must
     // return NULL instead, matching zip_with's null propagation
@@ -157,7 +137,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("vecCosine of identical vectors is 1") {
-    VectorFunctions.ensureRegistered(spark)
     val r = df.where(col("id") === 1)
       .select(VectorFunctions.vecCosine(col("a"), col("a"))).collect()(0).getDouble(0)
     assert(math.abs(r - 1.0) < 1e-12)

@@ -1,35 +1,25 @@
 package graft.lake
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** The minimum end-to-end slice of SURVEY.md §7.2 plus scale discipline:
   * fixture parquet → lake write (partitioned) → read-back with partition
   * pruning visible in the plan → binary read of the same files. */
-class LakeIoSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LakeIoSpec extends AnyFunSuite with GraftSuite {
 
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
   private var rootDir: java.nio.file.Path = _
   private var client: LakeClient = _
 
   override def beforeAll(): Unit = {
+    super.beforeAll()
     rootDir = Files.createTempDirectory("lakeio")
     client = LakeClient.local(rootDir.toString)
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("lakeio-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
   }
 
   override def afterAll(): Unit = {
-    spark0.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteDirectory(rootDir.toFile)
   }
 

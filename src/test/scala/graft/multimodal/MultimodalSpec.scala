@@ -1,29 +1,13 @@
 package graft.multimodal
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 import Multimodal._
 
 /** The Spark-side multimodal plumbing is real even though the codec is a
   * stub: schema shape, per-partition decoder lifecycle, deterministic
   * features, frame-sampling explode. */
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[2]")
-      .appName("multimodal-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = spark0.stop()
+class MultimodalSpec extends AnyFunSuite with GraftSuite {
 
   private def media(id: Long, bytes: Array[Byte]) =
     MediaRecord(id, bytes, "img", bytes.length, 1)

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 import graft.functions.VectorFunctions
 import graft.lake.LakeClient
 
@@ -11,30 +10,22 @@ import graft.lake.LakeClient
   * in-memory path bit-for-bit, the served IVF-PQ scan must prune to the
   * probed cells' partitions, and the incremental append must encode
   * exactly what a full re-encode would for the appended rows. */
-class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnnIndexSpec extends AnyFunSuite with GraftSuite {
 
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
   private val dir = "/root/testdata/sf0.001"
   private var rootDir: java.nio.file.Path = _
   private var lake: LakeClient = _
   private val Fs = "idx"
 
   override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("ann-index-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     rootDir = java.nio.file.Files.createTempDirectory("annindex")
     lake = LakeClient.local(rootDir.toString)
     lake.createFilesystem(Fs)
   }
 
   override def afterAll(): Unit = {
-    spark0.stop()
+    super.afterAll()
     org.apache.commons.io.FileUtils.deleteDirectory(rootDir.toFile)
   }
 
@@ -55,7 +46,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("flat-PQ index round-trips: model bit-equal, served topK == in-memory topK") {
-    VectorFunctions.ensureRegistered(spark)
     val e = embeddings
     val corpus = e.where(col("vec_id") =!= 0)
     val model = ProductQuantizer.fit(corpus)
@@ -84,7 +74,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     ProductQuantizer.encode(corpus, model)
 
   test("IVF-PQ index round-trips and the served scan prunes to the probed cells") {
-    VectorFunctions.ensureRegistered(spark)
     val e = embeddings
     val corpus = e.where(col("vec_id") =!= 0)
     val model = IvfPq.fit(corpus, cells = 8)
@@ -114,7 +103,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("appendIvfPq encodes the appended slice exactly as a full re-encode would") {
-    VectorFunctions.ensureRegistered(spark)
     val e = embeddings
     val base = e.where(col("vec_id") % 2 === 0)
       .select(col("vec_id"), col("embedding"))
@@ -138,7 +126,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // touched cell partition; compactPartitionedParquet is the
     // maintenance tool — after it runs, the index must serve the SAME
     // bits from fewer files, with the cell-prune layout untouched
-    VectorFunctions.ensureRegistered(spark)
     val e = embeddings
     val base = e.where(col("vec_id") % 4 === 0).select(col("vec_id"), col("embedding"))
     def slice(r: Int) = e.where(col("vec_id") % 4 === r)
@@ -178,7 +165,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // to preserve bit-identical scores and the same tie rule, so the
     // batch answer for each qid must equal the single-query answer
     // exactly
-    VectorFunctions.ensureRegistered(spark)
     val e = embeddings
     val corpus = e.where(col("vec_id") =!= 0)
     val model = ProductQuantizer.fit(corpus)
@@ -231,7 +217,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // cosine/tie rules), the union of probed cells is a static filter —
     // so the batch must (a) keep partition pruning on the persisted
     // coded table and (b) reproduce every single-query answer exactly
-    VectorFunctions.ensureRegistered(spark)
     val e = embeddings
     val corpus = e.where(col("vec_id") =!= 0)
     val model = IvfPq.fit(corpus, cells = 8)
@@ -295,7 +280,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("driftCheck reports stale-vs-refit recall through the operator API, deterministically") {
-    VectorFunctions.ensureRegistered(spark)
     val e = embeddings
     val base = e.where(col("vec_id") % 2 === 0).select(col("vec_id"), col("embedding"))
     val fresh = e.where(col("vec_id") % 2 === 1)
@@ -361,7 +345,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("driftCheckPq reports codebook stale-vs-refit recall, equal to the per-query derivation") {
-    VectorFunctions.ensureRegistered(spark)
     val e = embeddings
     val base = e.where(col("vec_id") % 2 === 0).select(col("vec_id"), col("embedding"))
     val fresh = e.where(col("vec_id") % 2 === 1)

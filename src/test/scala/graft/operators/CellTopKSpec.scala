@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 import graft.functions.{CellTopKOps, VectorFunctions}
 
 /** The round-14 kernel change ([[Similarity.knnJoinIvfKernel]] scoring
@@ -13,23 +13,7 @@ import graft.functions.{CellTopKOps, VectorFunctions}
   * against the retired per-candidate-row formulation, reconstructed
   * here verbatim, on corpora that exercise ties, duplicates, caps,
   * degenerate rows, and multi-chunk cells. */
-class CellTopKSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("cell-topk-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    VectorFunctions.ensureRegistered(spark)
-  }
-
-  override def afterAll(): Unit = spark0.stop()
+class CellTopKSpec extends AnyFunSuite with GraftSuite {
 
   /** The pre-round-14 kernel, verbatim: every (query, neighbor)
     * candidate as a row, scored in the join projection, trimmed by the

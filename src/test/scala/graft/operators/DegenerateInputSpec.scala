@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** Degenerate-text robustness: NULL text, empty strings, whitespace-only
   * and single-token documents through every operator that accepts an
@@ -17,25 +16,11 @@ import org.scalatest.BeforeAndAfterAll
   * NULL text groups as ONE dup group, produces no shingles/tokens (out
   * of near-dup scope), detects as "und", scores NULL quality (dropped
   * by any quality floor), and never kills a task. */
-class DegenerateInputSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("degenerate-input-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
+class DegenerateInputSpec extends AnyFunSuite with GraftSuite {
 
   override def afterAll(): Unit = {
     Dedup.clearCaches()
-    spark0.stop()
+    super.afterAll()
   }
 
   /** 0,1 NULL · 2,3 empty · 4 single-token · 5 whitespace-only ·

@@ -1,10 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import graft.functions.VectorFunctions
+import graft.GraftSuite
 
 /** Seed-sweep parity: [[IvfPq.topKBatch]] must equal per-query
   * [[IvfPq.topK]] row-for-row across RANDOM geometries, not just the
@@ -16,23 +14,7 @@ import graft.functions.VectorFunctions
   * union over every cell prunes nothing, so the predicate is dropped).
   * Deterministic: fixed seeds, driver-side synthesis,
   * bit-deterministic fits. */
-class IvfPqBatchParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("ivfpq-batch-parity")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    VectorFunctions.ensureRegistered(spark)
-  }
-
-  override def afterAll(): Unit = spark0.stop()
+class IvfPqBatchParitySpec extends AnyFunSuite with GraftSuite {
 
   /** (seed, dim, n, cells, m, nProbe, q, dupEvery) */
   private val cases = Seq(

@@ -1,31 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 import graft.functions.VectorFunctions
 
 /** The IVF fit step: Lloyd's converges, is bit-deterministic at any
   * parallelism (quantized sums), and produces centroids that beat the
   * single-global-centroid baseline. */
-class KMeansSpec extends AnyFunSuite with BeforeAndAfterAll {
+class KMeansSpec extends AnyFunSuite with GraftSuite {
 
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("kmeans-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = spark0.stop()
 
   test("two-level seeding (k > MaxFlatSeedCells): exactly k distinct seeds, deterministic") {
     // pure driver-side math — a synthetic pool keeps it fast and lets k
@@ -69,7 +54,6 @@ class KMeansSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // mean cosine to the OWN fitted centroid must beat the global-mean
     // baseline — the fit has to actually cluster
-    VectorFunctions.ensureRegistered(spark)
     def meanCos(centroids: Seq[Array[Float]]): Double = {
       val assigned = KMeans.assignCells(e, centroids)
       val withCos = e.join(assigned, "vec_id")

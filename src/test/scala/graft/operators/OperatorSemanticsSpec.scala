@@ -1,32 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** Cross-operator semantic invariants the DuckDB oracle can't express:
   * the approximate operators against their exact twins, cluster
   * consistency, and the end-user dedup op. */
-class OperatorSemanticsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class OperatorSemanticsSpec extends AnyFunSuite with GraftSuite {
 
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("semantics-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
 
   override def afterAll(): Unit = {
     Dedup.clearCaches() // drop the memoized pair graph before session stop
-    spark0.stop()
+    super.afterAll()
   }
 
   private def pairs(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
@@ -147,7 +133,6 @@ class OperatorSemanticsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("dd5 join-time first-collision dedup reproduces the naive distinct pair set") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     // naive reference form: band join + dropDuplicates + Hamming filter
     // (the pre-round-4 shape, minus the bucket cap — inactive here)
     val sig = graft.tables.Tables.documents(spark, dir)
@@ -223,7 +208,6 @@ class OperatorSemanticsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("dd5 with an ACTIVE bucket cap: self-join pairs preserved, over-cap buckets rep-linked") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     // cap=2 forces band buckets of size > 2 over the cap on the real
     // fixture. The A path must still produce exactly the capped naive
     // set (pairs whose FIRST colliding band is cap-excluded surface via

@@ -1,33 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** Invariants for the round-5 pipeline operators: repetition filters
   * (ta7), PII scrub (ta8), stratified sampling (cp2), sequence packing
   * (cp3). The DuckDB oracle checks value parity; these check the
   * SEMANTIC contracts — scrubbing leaves no residue, sampling nests
   * across rates, packing replays as a greedy cumsum. */
-class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelineOpsSpec extends AnyFunSuite with GraftSuite {
 
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("pipeline-ops-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = spark0.stop()
 
   test("ta7: exact scores on a hand-built repetitive doc, zeros on a distinct one") {
     import spark.implicits._

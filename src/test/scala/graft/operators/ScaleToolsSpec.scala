@@ -1,36 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** Scale-toolbox tests: salted joins give identical results to plain
   * joins while spreading hot keys; bucketed tables co-locate a join with
   * no shuffle on either side. */
-class ScaleToolsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
-  private var warehouse: java.nio.file.Path = _
-
-  override def beforeAll(): Unit = {
-    warehouse = java.nio.file.Files.createTempDirectory("wh")
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("scale-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = {
-    spark0.stop()
-    org.apache.commons.io.FileUtils.deleteDirectory(warehouse.toFile)
-  }
+class ScaleToolsSpec extends AnyFunSuite with GraftSuite {
 
   test("saltedJoin returns exactly the rows of the plain join under skew") {
     import spark.implicits._

@@ -1,33 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 import graft.functions.VectorFunctions
 
 /** kNN-join semantics: structure (k per vector, ranked), and measured
   * recall against the brute-force ground truth. */
-class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
+class SimilaritySpec extends AnyFunSuite with GraftSuite {
 
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
   private val dir = "/root/testdata/sf0.001"
 
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("similarity-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = spark0.stop()
-
   test("ss8 PQ: deterministic m-code encoding, in-range codes, useful re-ranked recall vs ss1") {
-    VectorFunctions.ensureRegistered(spark)
     val e = graft.tables.Tables.embeddings(spark, dir)
     val model = ProductQuantizer.fit(e, m = 8, k = 32, maxIters = 5)
     assert(model.m == 8 && model.k == 32 && model.subDim == 8)
@@ -52,7 +36,6 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ss9 IVF-PQ: cell-pruned encoded scan, deterministic encode, re-ranked recall vs ss1") {
-    VectorFunctions.ensureRegistered(spark)
     val e = graft.tables.Tables.embeddings(spark, dir)
     val model = IvfPq.fit(e, cells = 8)
     assert(model.centroids.size == 8 && model.pq.m == 8 && model.pq.k == 32)
@@ -92,7 +75,6 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     // past KMeans.MaxLiteralCells the residual's centroid lookup becomes
     // a broadcast equi-join on cell; the float subtraction must be the
     // literal element_at path's exactly
-    VectorFunctions.ensureRegistered(spark)
     val e = graft.tables.Tables.embeddings(spark, dir)
     val m = KMeans.fit(e, k = 20, maxIters = 3)
     def resOf(bp: Boolean): Map[Long, (Int, Seq[Float])] =
@@ -112,7 +94,6 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     // exact-cosine re-rank — the result must be bit-identical to ss1
     // (same rounding, same tie order). This pins the two-stage plumbing:
     // any row lost or duplicated by encode/probe/dedup would break it.
-    VectorFunctions.ensureRegistered(spark)
     val e = graft.tables.Tables.embeddings(spark, dir)
     val model = IvfPq.fit(e, cells = 8)
     val q = e.where(col("vec_id") === 0)
@@ -133,7 +114,6 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     // once, persist partitioned by cell, and a probe's cell filter must
     // become PartitionFilters on the scan — files of unprobed cells are
     // never read, which is the IVF scan cut at 100 TB
-    VectorFunctions.ensureRegistered(spark)
     val e = graft.tables.Tables.embeddings(spark, dir)
     val model = IvfPq.fit(e, cells = 8)
     val tmp = java.nio.file.Files.createTempDirectory("ivfpq_enc").toString
@@ -156,7 +136,6 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ss5 kNN join: at most k ranked neighbors per vector; useful recall vs brute force") {
-    VectorFunctions.ensureRegistered(spark)
     val k = 5
     val knn = Similarity.ss5KnnJoin(spark, dir, k)
     val rows = knn.collect()
@@ -206,7 +185,6 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     // miscomputed earlier-mask would emit a (query, neighbor) pair once
     // per colliding table; the per-query window would then rank the
     // same nbr_id at several rk values
-    VectorFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(11)
     val e = (0 until 40).flatMap { c =>
       val center = Array.fill(64)(rnd.nextGaussian().toFloat)
@@ -226,7 +204,6 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     // ground truth — the upper tiers never engage at fixture scale, so
     // without forcing them here their recall would be unmeasured until
     // a >16k-row corpus lands on them
-    VectorFunctions.ensureRegistered(spark)
     val e = graft.tables.Tables.embeddings(spark, dir)
     val truth = Similarity.ss6KnnExact(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 import graft.functions.VectorFunctions
 
 /** [[graft.functions.TopCells]] — the round-14 in-row probe-set
@@ -15,23 +14,9 @@ import graft.functions.VectorFunctions
   * drop contract: NULL embedding, wrong dimension, a NULL element, and
   * zero norm must all be ABSENT from the output row set on every path
   * (not present with an empty probe set). */
-class TopCellsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TopCellsSpec extends AnyFunSuite with GraftSuite {
 
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("topcells-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = spark0.stop()
 
   /** The documented selection rule, independently: score every cell in
     * plain driver arithmetic (ascending-index double accumulation — the

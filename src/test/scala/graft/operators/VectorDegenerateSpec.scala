@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** Degenerate-EMBEDDING robustness — the vector twin of
   * [[DegenerateInputSpec]] (round-12, VERDICT r11 #3): NULL embeddings,
@@ -22,27 +22,12 @@ import org.scalatest.BeforeAndAfterAll
   *     missing value; in the dim-free exact kernels it scores NULL
   *     (vec_dot length-mismatch contract) and drops out.
   */
-class VectorDegenerateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("vector-degenerate-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-  }
+class VectorDegenerateSpec extends AnyFunSuite with GraftSuite {
 
   override def afterAll(): Unit = {
     Dedup.clearCaches()
     Similarity.clearModelCache()
-    spark0.stop()
+    super.afterAll()
   }
 
   private val dim = 64

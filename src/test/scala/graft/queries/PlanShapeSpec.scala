@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** Physical-plan assertions — the 100 TB design bar is about plan shape,
   * not sf0.001 timings: dims broadcast (no fact shuffle), predicates reach
@@ -11,24 +11,9 @@ import org.scalatest.BeforeAndAfterAll
   * whole-stage codegen. These lock the shapes so a regression (e.g. a lost
   * broadcast hint turning into a sort-merge join) fails CI, not the
   * 100 TB run. */
-class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanShapeSpec extends AnyFunSuite with GraftSuite {
 
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[4]")
-      .appName("plan-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = spark0.stop()
 
   private def planString(df: DataFrame): String = {
     // materialize so AQE finalizes the plan, then inspect
@@ -73,7 +58,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("vec_dot runs inside whole-stage codegen") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     import org.apache.spark.sql.functions._
     val df = graft.tables.Tables.embeddings(spark, dir)
       .select(graft.functions.VectorFunctions.vecDot(col("embedding"), col("embedding")).as("d"))

@@ -1,42 +1,19 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** True Structured Streaming tests on MemoryStream with explicit event
   * times (no wall-clock sleeps — SURVEY.md §5.2 item 5): windowed aggs
   * emit on watermark passage, late data beyond the watermark is dropped,
   * streaming dedup is bounded by the watermark. */
-class EventStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EventStreamsSpec extends AnyFunSuite with GraftSuite {
 
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
                 event_type: String, value: Double)
-
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[2]")
-      .appName("streams-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the engine-default state store (GraftSession): every streaming
-      // test runs against the store production uses, not the in-heap one
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = spark0.stop()
 
   private def ts(minutes: Int): Timestamp =
     Timestamp.valueOf(s"2024-01-01 ${"%02d".format(minutes / 60)}:${"%02d".format(minutes % 60)}:00")

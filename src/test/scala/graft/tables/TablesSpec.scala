@@ -1,30 +1,15 @@
 package graft.tables
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.GraftSuite
 
 /** Fixture-schema canary (FIXTURES.md): if the driver regenerates data
   * with different shapes, every downstream query breaks — fail here
   * first, with a readable diff. */
-class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TablesSpec extends AnyFunSuite with GraftSuite {
 
-  private var spark0: SparkSession = _
-  private lazy val spark: SparkSession = spark0
   private val dir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark0 = SparkSession.builder()
-      .master("local[2]")
-      .appName("tables-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = spark0.stop()
 
   private def fields(name: String): Map[String, DataType] =
     Tables.table(spark, dir, name).schema.fields.map(f => f.name -> f.dataType).toMap
