@@ -68,6 +68,38 @@ object ScaleSmoke {
         lit(" trailing boiler plate of the and in to be")))
       .as("text"))
 
+  /** Quiet-box [[calCpu]] reading (NOTES round-11) the skew wall bars
+    * are set against. */
+  private val RefCpuSec = 0.78
+
+  /** Pinned single-core integer hash loop, seconds: a reading above
+    * [[RefCpuSec]] means a loaded or slower box. */
+  private def calCpu(): Double = {
+    val t0 = System.nanoTime()
+    val h = hashLoop(400000000, 0x9E3779B97F4A7C15L)
+    val s = (System.nanoTime() - t0) / 1e9
+    if (h == 42) print("") // keep the loop live under JIT
+    s
+  }
+
+  private def hashLoop(iters: Int, seed: Long): Long = {
+    var h = seed
+    var i = 0
+    while (i < iters) { h = (h ^ (h >>> 33)) * 0xFF51AFD7ED558CCDL + i; i += 1 }
+    h
+  }
+
+  /** 1-minute host load average, or the JVM's reading where
+    * /proc/loadavg is absent. */
+  private def hostLoad(): Double =
+    try {
+      val src = scala.io.Source.fromFile("/proc/loadavg")
+      try src.getLines().next().split(" ")(0).toDouble finally src.close()
+    } catch { case scala.util.control.NonFatal(_) =>
+      java.lang.management.ManagementFactory
+        .getOperatingSystemMXBean.getSystemLoadAverage
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val replicas = args.lift(1).map(_.toInt).getOrElse(20)
@@ -78,52 +110,6 @@ object ScaleSmoke {
       .builder("scale-smoke", s"local[$cpus]", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // every smoke line is also collected and self-persisted repo-side
-    // at exit (round 12): the driver's output-tail capture has
-    // truncated artifacts two rounds running, and smoke records must be
-    // corroborable from the repo file alone (VERDICT r11 #1). The local
-    // println SHADOWS Predef's for the whole main body, so custom
-    // stages need no per-site wiring.
-    val transcript = scala.collection.mutable.ListBuffer[String]()
-    def println(s: String): Unit = { Predef.println(s); transcript += s }
-    def persistTranscript(failed: Boolean): Unit =
-      try Calibration.persist("bench/smoke_latest.json",
-        s"""{"artifact":"scale-smoke","generated_unix_ms":${System.currentTimeMillis()},""" +
-          s""""sf":${Calibration.jstr(sfDir)},"replicas":$replicas,"failed":$failed,""" +
-          s""""lines":[${transcript.map(Calibration.jstr).mkString(",")}]}""" + "\n")
-      catch { case scala.util.control.NonFatal(e) =>
-        Predef.println(s"smoke artifact persist FAILED (stdout above is complete): $e")
-      }
-    // Abnormal-exit guard: an uncaught throw below (stage CONSTRUCTION
-    // sites sit outside the per-stage try blocks — e.g. a bad sfDir dies
-    // at the first count) used to skip persistTranscript entirely,
-    // leaving a PREVIOUS run's possibly-"failed":false artifact in place
-    // to be misattributed to the crashed run. The hook persists whatever
-    // transcript exists with failed=true; the normal exit disarms it.
-    var transcriptPersisted = false
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      if (!transcriptPersisted) {
-        transcript += ("smoke ABORTED before completion (uncaught throw " +
-          "or external kill) — artifact persisted by the shutdown hook")
-        persistTranscript(failed = true)
-      }
-    }))
-    // warmed min-of-3 start reading anchors the per-stage single
-    // samples (JIT warmup lives in the discarded samples); each stage
-    // then carries its own calCpu so a contended stage reading is
-    // adjudicable from the artifact without an isolated rerun
-    // (VERDICT r11 #5 — the 100× records swung up to 4× with
-    // co-tenancy and each needed an isolated rerun; NOTES.md "Round-12
-    // measurement records").
-    println(f"cal: start cpu=${Calibration.cal3(Calibration.calCpu _)}%.2f " +
-      f"mt=${Calibration.cal3(() => Calibration.calCpuMt())}%.2f " +
-      f"mem=${Calibration.cal3(() => Calibration.calMemMt())}%.2f " +
-      f"spark=${Calibration.cal3(() => Calibration.calSpark(spark))}%.2f " +
-      f"load=${Calibration.hostLoad()}%.1f " +
-      f"(quiet-box ref cpu ${Calibration.RefCpuSec}%.2f; mt/mem are " +
-      "full-width compute/DRAM-bandwidth bursts — elevated at LOW load " +
-      "means a slower box on that axis, at HIGH load a co-tenant)")
 
     val docs = replicaDocs(spark, sfDir, replicas)
     val embs = replicaEmbeddings(spark, sfDir, replicas)
@@ -179,7 +165,7 @@ object ScaleSmoke {
       try {
         val rows = body
         println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%8.1f s  $rows%10d rows" +
-          "  " + Calibration.stamp())
+          f"  load=${hostLoad()}%.1f")
       } catch {
         case e: Throwable =>
           failed = true
@@ -244,7 +230,7 @@ object ScaleSmoke {
         val recall = hit.toDouble / (nq.toLong * 10)
         println(f"${recallLabel.padTo(29, ' ')}${(System.nanoTime() - tR0) / 1e9}%8.1f s  " +
           f"recall $recall%.3f ($hit/${nq * 10} vs exact top-10)" +
-          "  " + Calibration.stamp())
+          f"  load=${hostLoad()}%.1f")
         if (recall < recallBar) {
           failed = true
           println(f"$barMsg $recall%.3f below the $recallBar%.2f bar")
@@ -408,7 +394,7 @@ object ScaleSmoke {
         val recall = if (truth == 0) 1.0 else connected.toDouble / truth
         println(f"recall: dd3 connectivity     ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
           f"recall $recall%.3f ($connected/$truth dd4 pairs intra-component)" +
-          "  " + Calibration.stamp())
+          f"  load=${hostLoad()}%.1f")
         // round-11: dd4's MinJaccardShingles floor removed the
         // single-shared-shingle coincidence pairs (half the 20×
         // denominator, full-shingle J ≈ .02) that banding rightly never
@@ -475,7 +461,7 @@ object ScaleSmoke {
         val recall = if (truth == 0) 1.0 else hits.toDouble / truth
         println(f"recall: ss5 routed (fitted)   ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
           f"recall $recall%.3f ($hits/$truth sampled ranks, $n rows)" +
-          "  " + Calibration.stamp())
+          f"  load=${hostLoad()}%.1f")
         if (recall < 0.8) {
           failed = true
           println(f"ss5 fitted-route rank-recall $recall%.3f below the .80 bar")
@@ -577,7 +563,7 @@ object ScaleSmoke {
         val gRec = if (guaranteedTruth == 0) 1.0 else connG.toDouble / guaranteedTruth
         println(f"recall: dd5 connectivity     ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
           f"guaranteed $gRec%.3f ($connG/$guaranteedTruth), raw $rawRec%.3f ($connRaw/$truth)" +
-          "  " + Calibration.stamp())
+          f"  load=${hostLoad()}%.1f")
         if (gRec < 0.999) {
           failed = true
           println(f"dd5 GUARANTEED connectivity $gRec%.3f below the .999 contract bar")
@@ -623,22 +609,22 @@ object ScaleSmoke {
       def barred(name: String, barSec: Double)(body: => Long): Unit = {
         // the bars are quiet-box absolutes (~4× measured round-11 wall);
         // on a loaded or slower box they false-fail, so scale each by
-        // this stage's OWN calibration reading relative to the quiet-box
-        // reference (ADVICE r11 #2 — the same normalization Bench's
-        // probes exist for). A faster/quiet box keeps the absolute bar.
-        val calPre = Calibration.calCpu()
-        val bar = barSec * math.max(1.0, calPre / Calibration.RefCpuSec)
+        // this stage's OWN calCpu reading relative to the quiet-box
+        // reference (ADVICE r11 #2). A faster/quiet box keeps the
+        // absolute bar.
+        val calPre = calCpu()
+        val bar = barSec * math.max(1.0, calPre / RefCpuSec)
         val t0 = System.nanoTime()
         try {
           val rows = body
           val sec = (System.nanoTime() - t0) / 1e9
           println(f"$name%-28s $sec%8.1f s  $rows%10d rows  cal=$calPre%.2f " +
-            f"load=${Calibration.hostLoad()}%.1f" +
+            f"load=${hostLoad()}%.1f" +
             (if (bar != barSec) f" bar=$bar%.0f" else ""))
           if (sec > bar) {
             failed = true
             println(f"$name took $sec%.1f s — over the $bar%.0f s skew bar " +
-              f"(base $barSec%.0f s x cal $calPre%.2f/${Calibration.RefCpuSec}%.2f; " +
+              f"(base $barSec%.0f s x cal $calPre%.2f/${RefCpuSec}%.2f; " +
               "hot-key shape regressed to a single-task form?)")
           }
         } catch {
@@ -729,7 +715,7 @@ object ScaleSmoke {
           val recall = if (truth == 0) 1.0 else hit.toDouble / truth
           println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
             f"recall $recall%.3f ($hit/$truth sampled pairs)" +
-            "  " + Calibration.stamp())
+            f"  load=${hostLoad()}%.1f")
           if (recall < bar) {
             failed = true
             println(f"$name recall $recall%.3f below the $bar%.2f bar — bump the tier table")
@@ -774,7 +760,7 @@ object ScaleSmoke {
           val raw = if (rawTruth == 0) 1.0 else rawHit.toDouble / rawTruth
           println(f"recall: ss2 lshNeardup@.4    ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
             f"near-dup(cos>=.99) $core%.3f ($coreHit/$coreTruth), raw@.4 $raw%.3f ($rawHit/$rawTruth)" +
-            "  " + Calibration.stamp())
+            f"  load=${hostLoad()}%.1f")
           if (core < 0.95) {
             failed = true
             println(f"recall: ss2 lshNeardup@.4 near-dup recall $core%.3f below the .95 contract bar")
@@ -1304,14 +1290,7 @@ object ScaleSmoke {
           .select(col("vec_a"), col("vec_b"))).count()
     }
 
-    println(f"cal: end cpu=${Calibration.cal3(Calibration.calCpu _)}%.2f " +
-      f"mt=${Calibration.cal3(() => Calibration.calCpuMt())}%.2f " +
-      f"mem=${Calibration.cal3(() => Calibration.calMemMt())}%.2f " +
-      f"spark=${Calibration.cal3(() => Calibration.calSpark(spark))}%.2f " +
-      f"load=${Calibration.hostLoad()}%.1f")
-    println(s"smoke ${if (failed) "FAILED" else "ok"}; artifact: bench/smoke_latest.json")
-    persistTranscript(failed)
-    transcriptPersisted = true // disarm the abnormal-exit hook
+    println(s"smoke ${if (failed) "FAILED" else "ok"}")
     spark.stop()
     if (failed) sys.exit(1)
   }

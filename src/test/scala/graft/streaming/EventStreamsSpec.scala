@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftSuite
@@ -14,6 +15,13 @@ class EventStreamsSpec extends AnyFunSuite with GraftSuite {
 
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
                 event_type: String, value: Double)
+
+  // the JVM-wide state-store maintenance thread outlives the session and
+  // would keep polling this suite's providers while later suites run
+  override protected def afterAll(): Unit = {
+    StateStore.stop()
+    super.afterAll()
+  }
 
   private def ts(minutes: Int): Timestamp =
     Timestamp.valueOf(s"2024-01-01 ${"%02d".format(minutes / 60)}:${"%02d".format(minutes % 60)}:00")
