@@ -1,8 +1,79 @@
 package graft
 
+import java.nio.file.Files
+import scala.collection.mutable.ArrayBuffer
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import graft.functions.VectorFunctions
+import graft.lake.LakeClient
+import graft.operators.{AnnIndex, CorpusPipeline, Dedup, IvfPq, KMeans, ProductQuantizer, Similarity}
+
+/** ScaleSmoke's stage runner: each stage is timed, printed and
+  * failure-checked here, so a stage body only computes and returns its
+  * summary. Messages raised inside a stage print after that stage's line. */
+private[graft] final class StageRunner {
+  private var anyFailure = false
+  private var held: Option[ArrayBuffer[String]] = None
+
+  /** The verdict: true once any stage threw or any check failed. */
+  def failed: Boolean = anyFailure
+
+  /** Print `msg`; inside a stage, after the stage's own line. */
+  def note(msg: String): Unit = held match {
+    case Some(buf) => buf += msg
+    case None => println(msg)
+  }
+
+  /** Unless `ok`, record a failure and print `msg`; the stage goes on. */
+  def check(ok: Boolean, msg: => String): Unit =
+    if (!ok) { anyFailure = true; note(msg) }
+
+  /** Run `body`, then print `name` padded to 28 characters, the wall
+    * time, the summary `body` returns and the host load. A throw prints
+    * `<name> FAILED: <Class>: <msg>` instead and records the failure. */
+  def stage(name: String)(body: => String): Unit = {
+    val buf = ArrayBuffer.empty[String]
+    held = Some(buf)
+    val t0 = System.nanoTime()
+    try {
+      val summary = body
+      println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%8.1f s  $summary" +
+        f"  load=${hostLoad()}%.1f")
+    } catch {
+      case e: Throwable =>
+        check(ok = false, s"$name FAILED: ${e.getClass.getSimpleName}: " +
+          String.valueOf(e.getMessage).take(300))
+    } finally {
+      held = None
+      buf.foreach(println)
+    }
+  }
+
+  /** Run `f` on a [[LakeClient.local]] lake holding the filesystem `fs`,
+    * rooted in a fresh temp directory that is deleted however `f` ends. */
+  def withLake[T](prefix: String, fs: String)(f: LakeClient => T): T = {
+    val root = Files.createTempDirectory(prefix)
+    try {
+      val lake = LakeClient.local(root.toString)
+      lake.createFilesystem(fs)
+      f(lake)
+    } finally FileUtils.deleteDirectory(root.toFile)
+  }
+
+  /** 1-minute host load average, or the JVM's reading where
+    * /proc/loadavg is absent. */
+  private def hostLoad(): Double =
+    try {
+      val src = scala.io.Source.fromFile("/proc/loadavg")
+      try src.getLines().next().split(" ")(0).toDouble finally src.close()
+    } catch { case scala.util.control.NonFatal(_) =>
+      java.lang.management.ManagementFactory
+        .getOperatingSystemMXBean.getSystemLoadAverage
+    }
+}
 
 /** Diagnostic main: run the heavy LLM-pipeline operators at ~20× the
   * largest fixture (100k documents, 40k embeddings) to show the plans
@@ -89,16 +160,21 @@ object ScaleSmoke {
     h
   }
 
-  /** 1-minute host load average, or the JVM's reading where
-    * /proc/loadavg is absent. */
-  private def hostLoad(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.getLines().next().split(" ")(0).toDouble finally src.close()
-    } catch { case scala.util.control.NonFatal(_) =>
-      java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-    }
+  /** Exact top-`k` of each query `qid` in `qs` over `corpus`, as
+    * (qid, vec_id) rows: the identical 3-decimal rounding + lower-id tie
+    * rule as the kernels, so set membership compares deterministically
+    * even on the tie-heavy replica corpus. */
+  private def exactTopK(corpus: DataFrame, qs: DataFrame, k: Int,
+                        excludeSelf: Boolean): DataFrame = {
+    val pairs = corpus.crossJoin(broadcast(qs))
+    (if (excludeSelf) pairs.where(col("vec_id") =!= col("qid")) else pairs)
+      .select(col("qid"), col("vec_id"),
+        round(VectorFunctions.vecCosine(col("embedding"), col("qemb")), 3).as("cos"))
+      .groupBy(col("qid"))
+      .agg(VectorFunctions.topkByScore(col("cos"), col("vec_id"), k).as("top"))
+      .select(col("qid"), explode(col("top")).as("t"))
+      .select(col("qid"), col("t.id").as("vec_id"))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -116,6 +192,15 @@ object ScaleSmoke {
     val nDocs = docs.count()
     val nVecs = embs.count()
     println(s"scale-smoke: $nDocs docs, $nVecs vectors (x$replicas)")
+    val run = new StageRunner
+    import run.{check, note, stage, withLake}
+
+    def timed(name: String)(body: => Long): Unit =
+      stage(name)(f"${body}%10d rows")
+
+    /** The fixture's embeddings table, unreplicated. */
+    def unreplicated(): DataFrame = graft.tables.Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding"))
 
     // Synthetic clustered corpus for the drift stages: `nClusters` tight
     // Gaussian clusters (centers ~ N(0,1)^64), deterministic driver-side
@@ -137,20 +222,22 @@ object ScaleSmoke {
         .repartition(cpus)
     }
 
-    // Orthogonal drift shared by the IVF-isotropic and PQ-control drift
-    // stages: seeded coordinate permutation + sign flips (preserves every
-    // pairwise cosine and the per-subspace statistics) over an appended
-    // id range. The IVF-vs-PQ comparison is only valid because both
-    // stages apply the IDENTICAL transform (same seed, same derivation
-    // order) — factored so an edit cannot fork them silently.
-    def orthogonalDrift(base: DataFrame): DataFrame = {
+    // The orthogonal-drift (base, appended) corpus pair shared by the
+    // IVF-isotropic and PQ-control drift stages: the unreplicated table
+    // and a seeded coordinate permutation + sign flips of it (preserves
+    // every pairwise cosine and the per-subspace statistics) over an
+    // appended id range. The IVF-vs-PQ comparison is only valid because
+    // both stages apply the IDENTICAL transform (same seed, same
+    // derivation order).
+    def orthogonalDriftPair(): (DataFrame, DataFrame) = {
+      val base = unreplicated()
       val rnd = new scala.util.Random(3)
       val perm = rnd.shuffle((0 until 64).toVector)
       val sign = Vector.fill(64)(if (rnd.nextBoolean()) 1.0f else -1.0f)
-      base.select((col("vec_id") + 10000000L).as("vec_id"),
+      (base, base.select((col("vec_id") + 10000000L).as("vec_id"),
         array((0 until 64).map(i =>
           (element_at(col("embedding"), perm(i) + 1) * lit(sign(i))).cast("float")): _*)
-          .as("embedding"))
+          .as("embedding")))
     }
 
     // The clustered-drift (base, appended) corpus pair shared by the IVF
@@ -159,92 +246,87 @@ object ScaleSmoke {
     def clusteredDriftPair(): (DataFrame, DataFrame) =
       (clustered(11, 0L), clustered(97, 1000000L))
 
-    var failed = false
-    def timed(name: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
+    // ADC batch-vs-loop harness (ss9 probed / ss8 flat-PQ) on the
+    // (per-query, batch) top-10 pair that `index` opens: warm one query,
+    // time the honest per-query loop (including its per-job planning —
+    // what a caller without the batch API pays), time the one-pass
+    // batch, assert every query answered identically, then the
+    // recall@10 bar vs exact brute force (VERDICT r11 #4's loud
+    // sketch-regression bars).
+    def adcBatchStage(label: String, recallLabel: String, recallBar: Double,
+                      barMsg: String, corpus: DataFrame)(
+        index: => (Array[Float] => DataFrame, DataFrame => DataFrame)): Unit = {
+      val cached = ArrayBuffer.empty[DataFrame]
+      var served: Option[(DataFrame, DataFrame, Int)] = None // (queries, answers, nq)
       try {
-        val rows = body
-        println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%8.1f s  $rows%10d rows" +
-          f"  load=${hostLoad()}%.1f")
-      } catch {
-        case e: Throwable =>
-          failed = true
-          println(s"$name FAILED: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
-      }
+        stage(label) {
+          val (loopTopK, batchTopK) = index
+          val qdf = embs.where(col("vec_id") % 1250 === 0)
+            .select(col("vec_id").as("qid"), col("embedding").as("qemb")).persist()
+          cached += qdf
+          val qvecs = qdf.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+          val nq = qvecs.length
+          // one throwaway query warms both code paths (JIT + codegen cache)
+          loopTopK(qvecs.head._2).count()
+          val tL0 = System.nanoTime()
+          var loopRows = 0L
+          qvecs.foreach { case (_, q) => loopRows += loopTopK(q).count() }
+          val tLoop = (System.nanoTime() - tL0) / 1e9
+          val tB0 = System.nanoTime()
+          val batchDf = batchTopK(qdf).persist()
+          cached += batchDf
+          val batchRows = batchDf.count()
+          val tBatch = (System.nanoTime() - tB0) / 1e9
+          assert(batchRows == nq.toLong * 10 && loopRows == batchRows,
+            s"batch must answer every query: $batchRows vs $loopRows rows for $nq queries")
+          served = Some((qdf, batchDf, nq))
+          check(tBatch <= tLoop,
+            s"$label serving slower than the per-query loop — adoption premise broken")
+          f"${nq}q: batch $tBatch%.1f s vs loop $tLoop%.1f s (x${tLoop / tBatch}%.1f)"
+        }
+        for ((qdf, batchDf, nq) <- served) stage(recallLabel) {
+          val hit = batchDf.select(col("qid"), col("vec_id"))
+            .join(exactTopK(corpus, qdf, 10, excludeSelf = false),
+              Seq("qid", "vec_id"), "left_semi").count()
+          val recall = hit.toDouble / (nq.toLong * 10)
+          check(recall >= recallBar, f"$barMsg $recall%.3f below the $recallBar%.2f bar")
+          f"recall $recall%.3f ($hit/${nq * 10} vs exact top-10)"
+        }
+      } finally cached.foreach(_.unpersist())
     }
 
-    // Shared ADC batch-vs-loop harness (ss9 probed / ss8 flat-PQ): warm
-    // one query, time the honest per-query loop (including its per-job
-    // planning — what a caller without the batch API pays), time the
-    // one-pass batch, assert every query answered identically, then the
-    // recall@10 bar vs exact brute force (VERDICT r11 #4's loud
-    // sketch-regression bars). Factored from two ~70-line copies whose
-    // unpersist-on-failure handling had already forked (r16 review);
-    // persists release in the finally, once, for both call sites.
-    def adcBatchStage(label: String, recallLabel: String, recallBar: Double,
-                      barMsg: String, corpus: DataFrame,
-                      loopTopK: Array[Float] => DataFrame,
-                      batchTopK: DataFrame => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      var qdf: DataFrame = null
-      var batchDf: DataFrame = null
-      try {
-        qdf = embs.where(col("vec_id") % 1250 === 0)
-          .select(col("vec_id").as("qid"), col("embedding").as("qemb")).persist()
-        val qvecs = qdf.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-        val nq = qvecs.length
-        // one throwaway query warms both code paths (JIT + codegen cache)
-        loopTopK(qvecs.head._2).count()
-        val tL0 = System.nanoTime()
-        var loopRows = 0L
-        qvecs.foreach { case (_, q) => loopRows += loopTopK(q).count() }
-        val tLoop = (System.nanoTime() - tL0) / 1e9
-        val tB0 = System.nanoTime()
-        batchDf = batchTopK(qdf).persist()
-        val batchRows = batchDf.count()
-        val tBatch = (System.nanoTime() - tB0) / 1e9
-        assert(batchRows == nq.toLong * 10 && loopRows == batchRows,
-          s"batch must answer every query: $batchRows vs $loopRows rows for $nq queries")
-        println(f"${(label + s" ${nq}q vs loop").padTo(28, ' ')}${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-          f"batch $tBatch%.1f s vs loop $tLoop%.1f s (x${tLoop / tBatch}%.1f)")
-        if (tBatch > tLoop) {
-          failed = true
-          println(s"$label serving slower than the per-query loop — adoption premise broken")
+    // Persisted-index drift: fit on `base` (IVF-PQ at `ivfCells` cells,
+    // or flat PQ when None), write, append `drifted` under the stale
+    // model through the real write→append→read path, then measure the
+    // re-fit signal with the OPERATOR API itself (AnnIndex.driftCheck /
+    // driftCheckPq over a bounded hash-ordered sample of drifted-slice
+    // queries — recent appends, exactly where drift bites). Each bar is
+    // (holds, message).
+    def driftStage(label: String, geometry: String, ivfCells: Option[Int],
+                   corpora: => (DataFrame, DataFrame), maxQueries: Int)(
+        bars: AnnIndex.DriftReport => Seq[(Boolean, String)]): Unit =
+      stage(label) {
+        withLake("graft-smoke-drift", "drift") { lake =>
+          val (base, drifted) = corpora
+          val corpus = base.unionByName(drifted)
+          val report = ivfCells match {
+            case Some(cells) =>
+              AnnIndex.writeIvfPq(lake, "drift", "idx", base, IvfPq.fit(base, cells = cells))
+              AnnIndex.appendIvfPq(lake, "drift", "idx", drifted)
+              AnnIndex.driftCheck(lake, "drift", "idx", corpus = corpus,
+                queries = drifted, topK = 10, rerank = 100, maxQueries = maxQueries)
+            case None =>
+              AnnIndex.writePq(lake, "drift", "idx", base, ProductQuantizer.fit(base))
+              AnnIndex.appendPq(lake, "drift", "idx", drifted)
+              AnnIndex.driftCheckPq(lake, "drift", "idx", corpus = corpus,
+                queries = drifted, topK = 10, rerank = 100, maxQueries = maxQueries)
+          }
+          bars(report).foreach { case (ok, msg) => check(ok, msg) }
+          f"stale ${report.staleRecall}%.2f vs refit ${report.refitRecall}%.2f " +
+            f"recall@10 ($geometry${report.queries} queries, " +
+            f"gain ${report.refitRecall - report.staleRecall}%+.2f)"
         }
-        // recall@10 vs exact brute force for the SAME queries; truth uses
-        // the identical 3-decimal rounding + lower-id tie rule as the
-        // kernel, so set membership compares deterministically even on
-        // the tie-heavy replica corpus.
-        val tR0 = System.nanoTime()
-        val exactTop = corpus.crossJoin(broadcast(qdf))
-          .select(col("qid"), col("vec_id"), round(
-            graft.functions.VectorFunctions.vecCosine(col("embedding"), col("qemb")),
-            3).as("cos"))
-          .groupBy(col("qid"))
-          .agg(graft.functions.VectorFunctions
-            .topkByScore(col("cos"), col("vec_id"), 10).as("top"))
-          .select(col("qid"), explode(col("top")).as("t"))
-          .select(col("qid"), col("t.id").as("vec_id"))
-        val hit = batchDf.select(col("qid"), col("vec_id"))
-          .join(exactTop, Seq("qid", "vec_id"), "left_semi").count()
-        val recall = hit.toDouble / (nq.toLong * 10)
-        println(f"${recallLabel.padTo(29, ' ')}${(System.nanoTime() - tR0) / 1e9}%8.1f s  " +
-          f"recall $recall%.3f ($hit/${nq * 10} vs exact top-10)" +
-          f"  load=${hostLoad()}%.1f")
-        if (recall < recallBar) {
-          failed = true
-          println(f"$barMsg $recall%.3f below the $recallBar%.2f bar")
-        }
-      } catch {
-        case e: Throwable =>
-          failed = true
-          println(s"$label FAILED: ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(300))
-      } finally {
-        if (batchDf != null) batchDf.unpersist()
-        if (qdf != null) qdf.unpersist()
       }
-    }
 
     // Streaming stages run FIRST among the operators (round 13 — VERDICT
     // r12 #4): as the closing stages of an 85-min run their walls swung
@@ -286,7 +368,7 @@ object ScaleSmoke {
         val perBatch = 5000 * replicas
         val users = 1000 * replicas
         var id = 0L
-        val states = scala.collection.mutable.ArrayBuffer[Long]()
+        val states = ArrayBuffer[Long]()
         for (b <- 0 until batches) {
           val base = b.toLong * 120 // 2 h apart ≫ 30-min gap + 10-min watermark
           in.addData((0 until perBatch).map { i =>
@@ -320,7 +402,7 @@ object ScaleSmoke {
         val batches = 20
         val perBatch = 2500 * replicas
         var uid = 0L
-        val states = scala.collection.mutable.ArrayBuffer[Long]()
+        val states = ArrayBuffer[Long]()
         for (b <- 0 until batches) {
           val base = b.toLong * 180 // 3 h apart ≫ 1-h watermark + 30-min band
           val pairs = (0 until perBatch).map { i =>
@@ -353,23 +435,22 @@ object ScaleSmoke {
       }
     }
 
-
     timed("dd2_hash (exact)") {
-      graft.operators.Dedup.dd2From(docs).count()
+      Dedup.dd2From(docs).count()
     }
     // dd4 pairs computed ONCE and shared by the dd4/dd6/dd3-recall
     // stages (each used to recompute the full inverted-index join)
     // explicit counts (the smoke just counted the corpus) — the df
     // cutoff never depends on cached-plan statistics here
-    val dd4Pairs = graft.operators.Dedup.dd4From(docs, nDocs)
+    val dd4Pairs = Dedup.dd4From(docs, nDocs)
       .select(col("doc_a"), col("doc_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     timed("dd4_ngram_jaccard (exact)") {
       dd4Pairs.count()
     }
-    val dd3Pairs = graft.operators.Dedup.dd3From(docs, nDocs)
+    val dd3Pairs = Dedup.dd3From(docs, nDocs)
       .select(col("doc_a"), col("doc_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     timed("dd3_minhash_lsh") {
       dd3Pairs.count()
     }
@@ -380,47 +461,32 @@ object ScaleSmoke {
     // (keep one doc per component) actually experiences — and the metric
     // that exposed the pre-round-10 over-cap discard, which measured
     // 752/1.25M pairs at 100× where chain linking recovers the cliques.
-    locally {
-      val t0 = System.nanoTime()
-      try {
-        val comp = graft.operators.Dedup.dd6ClusterFrom(
-          docs.select(col("doc_id")), dd3Pairs)
-          .select(col("doc_id"), col("cluster_rep"))
-        val truth = dd4Pairs.count()
-        val connected = dd4Pairs
-          .join(comp.select(col("doc_id").as("doc_a"), col("cluster_rep").as("ca")), "doc_a")
-          .join(comp.select(col("doc_id").as("doc_b"), col("cluster_rep").as("cb")), "doc_b")
-          .where(col("ca") === col("cb")).count()
-        val recall = if (truth == 0) 1.0 else connected.toDouble / truth
-        println(f"recall: dd3 connectivity     ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-          f"recall $recall%.3f ($connected/$truth dd4 pairs intra-component)" +
-          f"  load=${hostLoad()}%.1f")
-        // round-11: dd4's MinJaccardShingles floor removed the
-        // single-shared-shingle coincidence pairs (half the 20×
-        // denominator, full-shingle J ≈ .02) that banding rightly never
-        // finds — the denominator is now real near-dups only; bar .80,
-        // fine numbers in NOTES
-        if (recall < 0.8) {
-          failed = true
-          println(f"dd3 connectivity recall $recall%.3f below the .80 bar")
-        }
-      } catch {
-        case e: Throwable =>
-          failed = true
-          println(s"recall: dd3 connectivity FAILED: ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(300))
-      }
+    stage("recall: dd3 connectivity") {
+      val comp = Dedup.dd6ClusterFrom(docs.select(col("doc_id")), dd3Pairs)
+        .select(col("doc_id"), col("cluster_rep"))
+      val truth = dd4Pairs.count()
+      val connected = dd4Pairs
+        .join(comp.select(col("doc_id").as("doc_a"), col("cluster_rep").as("ca")), "doc_a")
+        .join(comp.select(col("doc_id").as("doc_b"), col("cluster_rep").as("cb")), "doc_b")
+        .where(col("ca") === col("cb")).count()
+      val recall = if (truth == 0) 1.0 else connected.toDouble / truth
+      // round-11: dd4's MinJaccardShingles floor removed the
+      // single-shared-shingle coincidence pairs (half the 20×
+      // denominator, full-shingle J ≈ .02) that banding rightly never
+      // finds — the denominator is now real near-dups only; bar .80,
+      // fine numbers in NOTES
+      check(recall >= 0.8, f"dd3 connectivity recall $recall%.3f below the .80 bar")
+      f"recall $recall%.3f ($connected/$truth dd4 pairs intra-component)"
     }
     timed("dd6_cluster (CC over dd4)") {
-      graft.operators.Dedup.dd6ClusterFrom(
-        docs.select(col("doc_id")), dd4Pairs).count()
+      Dedup.dd6ClusterFrom(docs.select(col("doc_id")), dd4Pairs).count()
     }
     dd3Pairs.unpersist()
     dd4Pairs.unpersist()
     timed("ss5_knn_join (routed: IVF)") {
       // 40k rows is past the home LSH tier, so this exercises the
       // knnJoinIvf route (seeded 64 cells, knnNProbeFor depth)
-      graft.operators.Similarity.knnJoin(embs).count()
+      Similarity.knnJoin(embs).count()
     }
     // the SHIPPED ss5 route past the home tier is the FITTED one (the
     // entry memoizes a KMeans fit — ss5KnnJoin); measure its rank-recall
@@ -431,54 +497,31 @@ object ScaleSmoke {
     // finds — so the bar (.8) is a collapse detector (the 8×8 LSH tier
     // measured .138 on rank-recall; a regression of that kind fails
     // loudly), while the fixture spec owns the fine-grained .786 number.
-    locally {
-      val t0 = System.nanoTime()
-      // unpersists live in the finally: a mid-stage throw (the crossJoin
-      // is the smoke's heaviest single plan) previously leaked both
-      // caches into every later stage — the leak class the exactTruth /
-      // ss2-hits fixes below already closed elsewhere
+    stage("recall: ss5 routed (fitted)") {
+      // the crossJoin is the smoke's heaviest single plan: both caches
+      // are released however the stage ends
       var routed: DataFrame = null
       var exact: DataFrame = null
       try {
-        routed = graft.operators.Similarity.knnJoinFitted(embs).persist()
+        routed = Similarity.knnJoinFitted(embs).persist()
         val n = routed.count()
         val qs = embs.where(col("vec_id") % 80 === 0)
           .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-        exact = embs.crossJoin(broadcast(qs))
-          .where(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id"), round(
-            graft.functions.VectorFunctions.vecCosine(col("embedding"), col("qemb")),
-            3).as("cos"))
-          .groupBy(col("qid"))
-          .agg(graft.functions.VectorFunctions
-            .topkByScore(col("cos"), col("vec_id"), 5).as("top"))
-          .select(col("qid"), explode(col("top")).as("t"))
-          .select(col("qid"), col("t.id").as("nbr_id"))
-          .persist()
+        exact = exactTopK(embs, qs, 5, excludeSelf = true).persist()
         val truth = exact.count()
-        val hits = routed.select(col("vec_id").as("qid"), col("nbr_id"))
-          .join(exact, Seq("qid", "nbr_id"), "left_semi").count()
+        val hits = routed.select(col("vec_id").as("qid"), col("nbr_id").as("vec_id"))
+          .join(exact, Seq("qid", "vec_id"), "left_semi").count()
         val recall = if (truth == 0) 1.0 else hits.toDouble / truth
-        println(f"recall: ss5 routed (fitted)   ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-          f"recall $recall%.3f ($hits/$truth sampled ranks, $n rows)" +
-          f"  load=${hostLoad()}%.1f")
-        if (recall < 0.8) {
-          failed = true
-          println(f"ss5 fitted-route rank-recall $recall%.3f below the .80 bar")
-        }
-      } catch {
-        case e: Throwable =>
-          failed = true
-          println(s"recall: ss5 routed (fitted) FAILED: ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(300))
+        check(recall >= 0.8, f"ss5 fitted-route rank-recall $recall%.3f below the .80 bar")
+        f"recall $recall%.3f ($hits/$truth sampled ranks, $n rows)"
       } finally {
         if (routed != null) routed.unpersist()
         if (exact != null) exact.unpersist()
       }
     }
-    val dd5Pairs = graft.operators.Dedup.dd5From(docs)
+    val dd5Pairs = Dedup.dd5From(docs)
       .select(col("doc_a"), col("doc_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     timed("dd5_simhash (capped bands)") {
       dd5Pairs.count()
     }
@@ -500,91 +543,78 @@ object ScaleSmoke {
     //     it records how much of the corpus' hamming mass sits in
     //     doubly-degenerate buckets at this template density (synthetic
     //     fixture docs SimHash-collide heavily; measured ~.19 at 20×).
-    locally {
-      val t0 = System.nanoTime()
-      try {
-        graft.functions.VectorFunctions.ensureRegistered(spark)
-        val cap = graft.operators.Dedup.MaxBucketSize
-        val sigAll = docs
-          .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("tok"))
-          .withColumn("h", xxhash64(col("tok")))
-          .groupBy(col("doc_id"))
-          .agg(graft.functions.VectorFunctions.simhashAgg(col("h")).as("simhash"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val bandedAll = sigAll.select(col("doc_id"), col("simhash"),
-          posexplode(array((0 until 4).map(i =>
-            shiftright(col("simhash"), i * 16).bitwiseAND(0xFFFFL)): _*))
-            .as(Seq("band", "chunk")))
-        // FULL-corpus bucket stats (the guarantee is a property of the
-        // production bucket populations, not the sample's)
-        val bstats = bandedAll.groupBy(col("band"), col("chunk"))
-          .agg(count(lit(1)).as("raw"), countDistinct(col("simhash")).as("dsig"))
-          .where(col("raw") > cap && col("dsig") > cap)
-          .select(col("band"), col("chunk"), lit(true).as("degenerate"))
-        val sig = sigAll.where(col("doc_id") % 5 === 0)
-        val banded = sig.select(col("doc_id"), col("simhash"),
-          posexplode(array((0 until 4).map(i =>
-            shiftright(col("simhash"), i * 16).bitwiseAND(0xFFFFL)): _*))
-            .as(Seq("band", "chunk")))
-        val a = banded.select(col("doc_id").as("doc_a"), col("simhash").as("sh_a"),
-          col("band"), col("chunk"))
-        val b = banded.select(col("doc_id").as("doc_b"), col("simhash").as("sh_b"),
-          col("band"), col("chunk"))
-        // colliding (pair, band) rows annotated with the bucket's
-        // degeneracy; a pair is GUARANTEED iff any colliding band is
-        // not doubly-degenerate
-        val collisions = a.join(b, Seq("band", "chunk"))
-          .where(col("doc_a") < col("doc_b"))
-          .where(bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= 3)
-          .join(bstats, Seq("band", "chunk"), "left_outer")
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(max(when(col("degenerate").isNull, 1).otherwise(0)).as("guaranteed"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val truth = collisions.count()
-        val guaranteedTruth = collisions.where(col("guaranteed") === 1).count()
-        // the PRODUCT path on purpose: dd5's sketch graph chains
-        // transitively (sigs drifting ≤3 bits per hop), so at 100× its
-        // diameter blows past min-label propagation — sketch-derived
-        // edges pass the round-12 provenance hint and start at star
-        // contraction directly, skipping the probe rounds that each
-        // cost a full-edge-set join+groupBy (the first 100× run threw
-        // here when no star path existed at all)
-        val comp = graft.operators.Dedup.dd6ClusterFrom(
-          docs.select(col("doc_id")), dd5Pairs, highDiameterHint = true)
-          .select(col("doc_id"), col("cluster_rep"))
-        val joined = collisions
-          .join(comp.select(col("doc_id").as("doc_a"), col("cluster_rep").as("ca")), "doc_a")
-          .join(comp.select(col("doc_id").as("doc_b"), col("cluster_rep").as("cb")), "doc_b")
-          .select(col("guaranteed"), (col("ca") === col("cb")).as("conn"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val connRaw = joined.where(col("conn")).count()
-        val connG = joined.where(col("conn") && col("guaranteed") === 1).count()
-        val rawRec = if (truth == 0) 1.0 else connRaw.toDouble / truth
-        val gRec = if (guaranteedTruth == 0) 1.0 else connG.toDouble / guaranteedTruth
-        println(f"recall: dd5 connectivity     ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-          f"guaranteed $gRec%.3f ($connG/$guaranteedTruth), raw $rawRec%.3f ($connRaw/$truth)" +
-          f"  load=${hostLoad()}%.1f")
-        if (gRec < 0.999) {
-          failed = true
-          println(f"dd5 GUARANTEED connectivity $gRec%.3f below the .999 contract bar")
-        }
-        sigAll.unpersist(); collisions.unpersist(); joined.unpersist()
-      } catch {
-        case e: Throwable =>
-          failed = true
-          println(s"recall: dd5 connectivity FAILED: ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(300))
-      }
+    stage("recall: dd5 connectivity") {
+      VectorFunctions.ensureRegistered(spark)
+      val cap = Dedup.MaxBucketSize
+      val sigAll = docs
+        .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("tok"))
+        .withColumn("h", xxhash64(col("tok")))
+        .groupBy(col("doc_id"))
+        .agg(VectorFunctions.simhashAgg(col("h")).as("simhash"))
+        .persist(MEMORY_AND_DISK)
+      val bandedAll = sigAll.select(col("doc_id"), col("simhash"),
+        posexplode(array((0 until 4).map(i =>
+          shiftright(col("simhash"), i * 16).bitwiseAND(0xFFFFL)): _*))
+          .as(Seq("band", "chunk")))
+      // FULL-corpus bucket stats (the guarantee is a property of the
+      // production bucket populations, not the sample's)
+      val bstats = bandedAll.groupBy(col("band"), col("chunk"))
+        .agg(count(lit(1)).as("raw"), countDistinct(col("simhash")).as("dsig"))
+        .where(col("raw") > cap && col("dsig") > cap)
+        .select(col("band"), col("chunk"), lit(true).as("degenerate"))
+      val sig = sigAll.where(col("doc_id") % 5 === 0)
+      val banded = sig.select(col("doc_id"), col("simhash"),
+        posexplode(array((0 until 4).map(i =>
+          shiftright(col("simhash"), i * 16).bitwiseAND(0xFFFFL)): _*))
+          .as(Seq("band", "chunk")))
+      val a = banded.select(col("doc_id").as("doc_a"), col("simhash").as("sh_a"),
+        col("band"), col("chunk"))
+      val b = banded.select(col("doc_id").as("doc_b"), col("simhash").as("sh_b"),
+        col("band"), col("chunk"))
+      // colliding (pair, band) rows annotated with the bucket's
+      // degeneracy; a pair is GUARANTEED iff any colliding band is
+      // not doubly-degenerate
+      val collisions = a.join(b, Seq("band", "chunk"))
+        .where(col("doc_a") < col("doc_b"))
+        .where(bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= 3)
+        .join(bstats, Seq("band", "chunk"), "left_outer")
+        .groupBy(col("doc_a"), col("doc_b"))
+        .agg(max(when(col("degenerate").isNull, 1).otherwise(0)).as("guaranteed"))
+        .persist(MEMORY_AND_DISK)
+      val truth = collisions.count()
+      val guaranteedTruth = collisions.where(col("guaranteed") === 1).count()
+      // the PRODUCT path on purpose: dd5's sketch graph chains
+      // transitively (sigs drifting ≤3 bits per hop), so at 100× its
+      // diameter blows past min-label propagation — sketch-derived
+      // edges pass the round-12 provenance hint and start at star
+      // contraction directly, skipping the probe rounds that each
+      // cost a full-edge-set join+groupBy (the first 100× run threw
+      // here when no star path existed at all)
+      val comp = Dedup.dd6ClusterFrom(
+        docs.select(col("doc_id")), dd5Pairs, highDiameterHint = true)
+        .select(col("doc_id"), col("cluster_rep"))
+      val joined = collisions
+        .join(comp.select(col("doc_id").as("doc_a"), col("cluster_rep").as("ca")), "doc_a")
+        .join(comp.select(col("doc_id").as("doc_b"), col("cluster_rep").as("cb")), "doc_b")
+        .select(col("guaranteed"), (col("ca") === col("cb")).as("conn"))
+        .persist(MEMORY_AND_DISK)
+      val connRaw = joined.where(col("conn")).count()
+      val connG = joined.where(col("conn") && col("guaranteed") === 1).count()
+      val rawRec = if (truth == 0) 1.0 else connRaw.toDouble / truth
+      val gRec = if (guaranteedTruth == 0) 1.0 else connG.toDouble / guaranteedTruth
+      check(gRec >= 0.999, f"dd5 GUARANTEED connectivity $gRec%.3f below the .999 contract bar")
+      sigAll.unpersist(); collisions.unpersist(); joined.unpersist()
+      f"guaranteed $gRec%.3f ($connG/$guaranteedTruth), raw $rawRec%.3f ($connRaw/$truth)"
     }
     dd5Pairs.unpersist()
     timed("ss2/lshNeardupPairs (tiered)") {
-      graft.operators.Similarity.lshNeardupPairs(embs, 0.4).count()
+      Similarity.lshNeardupPairs(embs, 0.4).count()
     }
     timed("ss4_ann_ivf (tiered cells)") {
-      graft.operators.Similarity.ss4From(embs).count()
+      Similarity.ss4From(embs).count()
     }
     timed("dd8_decontaminate (bcast bench)") {
-      graft.operators.Dedup.decontaminateFrom(
+      Dedup.decontaminateFrom(
         docs.where(col("doc_id") % 50 =!= 0),
         docs.where(col("doc_id") % 50 === 0)).count()
     }
@@ -614,37 +644,27 @@ object ScaleSmoke {
         // absolute bar.
         val calPre = calCpu()
         val bar = barSec * math.max(1.0, calPre / RefCpuSec)
-        val t0 = System.nanoTime()
-        try {
+        stage(name) {
+          val t0 = System.nanoTime()
           val rows = body
           val sec = (System.nanoTime() - t0) / 1e9
-          println(f"$name%-28s $sec%8.1f s  $rows%10d rows  cal=$calPre%.2f " +
-            f"load=${hostLoad()}%.1f" +
-            (if (bar != barSec) f" bar=$bar%.0f" else ""))
-          if (sec > bar) {
-            failed = true
-            println(f"$name took $sec%.1f s — over the $bar%.0f s skew bar " +
-              f"(base $barSec%.0f s x cal $calPre%.2f/${RefCpuSec}%.2f; " +
-              "hot-key shape regressed to a single-task form?)")
-          }
-        } catch {
-          case e: Throwable =>
-            failed = true
-            println(s"$name FAILED: ${e.getClass.getSimpleName}: " +
-              String.valueOf(e.getMessage).take(300))
+          check(sec <= bar, f"$name took $sec%.1f s — over the $bar%.0f s skew bar " +
+            f"(base $barSec%.0f s x cal $calPre%.2f/${RefCpuSec}%.2f; " +
+            "hot-key shape regressed to a single-task form?)")
+          f"$rows%10d rows  cal=$calPre%.2f" + (if (bar != barSec) f" bar=$bar%.0f" else "")
         }
       }
       barred("skew: dd2 mega-hash", 120) {
-        graft.operators.Dedup.dd2From(adv).count()
+        Dedup.dd2From(adv).count()
       }
       barred("skew: dd4 stop-shingles", 240) {
-        graft.operators.Dedup.dd4From(adv, nAdv).count()
+        Dedup.dd4From(adv, nAdv).count()
       }
       barred("skew: dd3 degenerate buckets", 480) {
-        graft.operators.Dedup.dd3From(adv, nAdv).count()
+        Dedup.dd3From(adv, nAdv).count()
       }
       barred("skew: dd5 mega-sig + chunks", 240) {
-        graft.operators.Dedup.dd5From(adv).count()
+        Dedup.dd5From(adv).count()
       }
       // round 14: the IVF kNN kernel's adversarial shape — a 90 % flood
       // cluster whose shared primary cell holds ~27k members (7 chunks
@@ -664,8 +684,8 @@ object ScaleSmoke {
             .otherwise(lit(1.0) +
               pmod(xxhash64(col("id"), j), lit(100L)).cast("double") / 1000.0)
             .cast("float")).as("embedding"))
-        val cs = graft.operators.Similarity.seededCentroidsForTest(16, dim)
-        val out = graft.operators.Similarity.knnJoinIvfKernel(
+        val cs = Similarity.seededCentroidsForTest(16, dim)
+        val out = Similarity.knnJoinIvfKernel(
           flood, 5, cs, Seq.fill(cs.size)(1.0), 4, maxPop = Long.MaxValue)
         val rows = out.count()
         assert(rows >= (0.9 * nV * 5).toLong,
@@ -681,53 +701,38 @@ object ScaleSmoke {
     // measured recall is the tier's, not a small-corpus proxy.
     //
     // The exact truth is computed ONCE and shared by every pair-recall
-    // stage (round 13 — VERDICT r12 #2: the eight stages below each
-    // re-derived exactNeardupPairs over the SAME 1/7 sample, and at 100×
-    // the verification cost more wall than the operators it verified —
-    // ss4's five-rung ladder alone ~1,100 s of an 85-min smoke). One
-    // pass at the lowest threshold in use (.4) with the rounded cosine
-    // retained; each stage filters to its own threshold — bit-identical
-    // to a direct per-threshold pass because exactNeardupPairs rounds
-    // cos to 3 decimals BEFORE its threshold filter.
-    val exactTruth = graft.operators.Similarity
+    // stage (round 13 — VERDICT r12 #2: at 100× per-stage re-derivation
+    // cost more wall than the operators it verified — ss4's five-rung
+    // ladder alone ~1,100 s of an 85-min smoke). One pass at the lowest
+    // threshold in use (.4) with the rounded cosine retained; each stage
+    // filters to its own threshold — bit-identical to a direct
+    // per-threshold pass because exactNeardupPairs rounds cos to 3
+    // decimals BEFORE its threshold filter.
+    val exactTruth = Similarity
       .exactNeardupPairs(embs.where(col("vec_id") % 7 === 0), 0.4)
       .select(col("vec_a"), col("vec_b"), col("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the whole pair-recall section releases the shared truth cache in a
-    // finally: an uncaught stage failure must not leak the MEMORY_AND_DISK
-    // frame into every later smoke stage (round-14 ADVICE — the same leak
-    // class the round-13 ss2 hits fix closed)
+      .persist(MEMORY_AND_DISK)
+    // the shared truth cache is released however the section ends
     try {
       timed("exact pair truth@.4 (shared)") {
         exactTruth.count()
       }
       def sampleRecall(name: String, approx: => DataFrame, threshold: Double,
-                       bar: Double): Unit = {
-        val t0 = System.nanoTime()
-        try {
-          val exact = exactTruth.where(col("cos") >= threshold)
-            .select(col("vec_a"), col("vec_b"))
-          val inSample = approx
-            .where(col("vec_a") % 7 === 0 && col("vec_b") % 7 === 0)
-            .select(col("vec_a"), col("vec_b"))
-          val truth = exact.count()
-          val hit = inSample.join(exact, Seq("vec_a", "vec_b"), "left_semi").count()
-          val recall = if (truth == 0) 1.0 else hit.toDouble / truth
-          println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-            f"recall $recall%.3f ($hit/$truth sampled pairs)" +
-            f"  load=${hostLoad()}%.1f")
-          if (recall < bar) {
-            failed = true
-            println(f"$name recall $recall%.3f below the $bar%.2f bar — bump the tier table")
-          }
-        } catch {
-          case e: Throwable =>
-            failed = true
-            println(s"$name FAILED: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
-        }
+                       bar: Double): Unit = stage(name) {
+        val exact = exactTruth.where(col("cos") >= threshold)
+          .select(col("vec_a"), col("vec_b"))
+        val inSample = approx
+          .where(col("vec_a") % 7 === 0 && col("vec_b") % 7 === 0)
+          .select(col("vec_a"), col("vec_b"))
+        val truth = exact.count()
+        val hit = inSample.join(exact, Seq("vec_a", "vec_b"), "left_semi").count()
+        val recall = if (truth == 0) 1.0 else hit.toDouble / truth
+        check(recall >= bar,
+          f"$name recall $recall%.3f below the $bar%.2f bar — bump the tier table")
+        f"recall $recall%.3f ($hit/$truth sampled pairs)"
       }
       sampleRecall("recall: lshNeardupPairs@.45",
-        graft.operators.Similarity.lshNeardupPairs(embs, 0.45), 0.45, bar = 0.8)
+        Similarity.lshNeardupPairs(embs, 0.45), 0.45, bar = 0.8)
       // ss2's OWN operating point (threshold .4): contract band vs raw
       // physics, the dd5-connectivity split (VERDICT r11 #4). A flat bar
       // at the query threshold is corpus-mix, not contract: the .4 truth
@@ -740,31 +745,22 @@ object ScaleSmoke {
       // "Round-12 changes" item 4: marginal bands .10/.14, zero truth
       // mass in [.5,.99), replica band 5430/5430); raw threshold recall
       // prints informationally.
-      locally {
-        val t0 = System.nanoTime()
-        // released in finally (ADVICE r12): a throw between persist and the
-        // success-path unpersist leaked the cached frame into every later
-        // smoke stage
+      stage("recall: ss2 lshNeardup@.4") {
         var hits: DataFrame = null
         try {
-          val inSample = graft.operators.Similarity.lshNeardupPairs(embs, 0.4)
+          val inSample = Similarity.lshNeardupPairs(embs, 0.4)
             .where(col("vec_a") % 7 === 0 && col("vec_b") % 7 === 0)
             .select(col("vec_a"), col("vec_b"))
           hits = exactTruth.join(inSample, Seq("vec_a", "vec_b"), "left_semi")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .persist(MEMORY_AND_DISK)
           val coreTruth = exactTruth.where(col("cos") >= 0.99).count()
           val coreHit = hits.where(col("cos") >= 0.99).count()
           val rawTruth = exactTruth.count()
           val rawHit = hits.count()
           val core = if (coreTruth == 0) 1.0 else coreHit.toDouble / coreTruth
           val raw = if (rawTruth == 0) 1.0 else rawHit.toDouble / rawTruth
-          println(f"recall: ss2 lshNeardup@.4    ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-            f"near-dup(cos>=.99) $core%.3f ($coreHit/$coreTruth), raw@.4 $raw%.3f ($rawHit/$rawTruth)" +
-            f"  load=${hostLoad()}%.1f")
-          if (core < 0.95) {
-            failed = true
-            println(f"recall: ss2 lshNeardup@.4 near-dup recall $core%.3f below the .95 contract bar")
-          }
+          check(core >= 0.95,
+            f"recall: ss2 lshNeardup@.4 near-dup recall $core%.3f below the .95 contract bar")
           // tier-regression drift guard (ADVICE r12): the hard near-dup
           // band is dominated by exact replica pairs, whose identical LSH
           // signatures collide under ANY tier geometry — it has almost no
@@ -776,24 +772,17 @@ object ScaleSmoke {
           // recorded baseline means code or tier changed, not noise.
           // Baselines = the round-12 measured artifacts at the two
           // official smoke scales.
-          val rawBaseline = Map(20 -> 0.425, 100 -> 0.509).get(replicas)
-          rawBaseline match {
-            case Some(base) if raw < base - 0.05 =>
-              failed = true
-              println(f"recall: ss2 raw@.4 $raw%.3f dropped >.05 below the recorded " +
-                f"x$replicas baseline $base%.3f — tier geometry regressed")
-            case Some(base) if raw > base + 0.05 =>
-              println(f"note: ss2 raw@.4 $raw%.3f above the x$replicas baseline " +
-                f"$base%.3f — record the new value in ScaleSmoke")
-            case _ if rawBaseline.isEmpty =>
-              println(f"note: no ss2 raw@.4 baseline recorded for x$replicas — drift guard inactive")
-            case _ => ()
+          Map(20 -> 0.425, 100 -> 0.509).get(replicas) match {
+            case Some(base) =>
+              check(raw >= base - 0.05, f"recall: ss2 raw@.4 $raw%.3f dropped >.05 below " +
+                f"the recorded x$replicas baseline $base%.3f — tier geometry regressed")
+              if (raw > base + 0.05)
+                note(f"note: ss2 raw@.4 $raw%.3f above the x$replicas baseline " +
+                  f"$base%.3f — record the new value in ScaleSmoke")
+            case None =>
+              note(f"note: no ss2 raw@.4 baseline recorded for x$replicas — drift guard inactive")
           }
-        } catch {
-          case e: Throwable =>
-            failed = true
-            println(s"recall: ss2 lshNeardup@.4 FAILED: ${e.getClass.getSimpleName}: " +
-              String.valueOf(e.getMessage).take(300))
+          f"near-dup(cos>=.99) $core%.3f ($coreHit/$coreTruth), raw@.4 $raw%.3f ($rawHit/$rawTruth)"
         } finally {
           if (hits != null) hits.unpersist()
         }
@@ -803,14 +792,12 @@ object ScaleSmoke {
       // probing measured at this tier: fitted .843 in 10 s (the round-5
       // head-to-head vs symmetric nProbe=3: .788 in 91 s)
       sampleRecall("recall: ss4 IVF (seeded)@.4",
-        graft.operators.Similarity.ss4From(embs), 0.4, bar = 0.5)
+        Similarity.ss4From(embs), 0.4, bar = 0.5)
       sampleRecall("recall: ss4 IVF (fitted)@.4", {
-        val m = graft.operators.KMeans.fit(embs, k = 64, maxIters = 5)
-        graft.operators.Similarity.ivfCellPairs(
-          graft.operators.KMeans.assignTopCells(embs, m.centroids,
-            graft.operators.Similarity.IvfNProbe), 0.4,
-          indexBcast = graft.operators.Similarity.ivfIndexBroadcastable(
-            embs, 4L * graft.operators.Similarity.IvfNProbe))
+        val m = KMeans.fit(embs, k = 64, maxIters = 5)
+        Similarity.ivfCellPairs(
+          KMeans.assignTopCells(embs, m.centroids, Similarity.IvfNProbe), 0.4,
+          indexBcast = Similarity.ivfIndexBroadcastable(embs, 4L * Similarity.IvfNProbe))
       }, 0.4, bar = 0.75)
       // seeding cost growth BEFORE the big fits: flat Gonzalez is
       // O(k·pool) with pool ∝ k — quadratic in k — so the ×4 step
@@ -819,44 +806,32 @@ object ScaleSmoke {
       // hold the measured ratio far under that. Pools are collected per k
       // exactly as fit() does (8k hash-ordered rows), so the ratio is the
       // fit's real driver-side seeding cost, not a synthetic one.
-      locally {
-        val t0 = System.nanoTime()
-        try {
-          // the zero-norm filter is part of fit()'s pool (KMeans.scala:
-          // a zero vector in the head makes gonzalez cosines NaN and
-          // seedIndices non-distinct) — mirror it or the measured pool
-          // is not fit's real one on a corpus with failed-embedding rows
-          def pool(k: Int): Array[(Long, Array[Float])] = embs
-            .where(graft.functions.VectorFunctions.vecDot(
-              col("embedding"), col("embedding")) > 0)
-            .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-            .limit(math.max(8 * k, 1024))
-            .select(col("vec_id"), col("embedding")).collect()
-            .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-          def seedTime(k: Int): Double = {
-            val p = pool(k)
-            val t = System.nanoTime()
-            val s = graft.operators.KMeans.seedIndices(p, k)
-            assert(s.length == k && s.distinct.length == k,
-              s"seedIndices($k) must return k distinct seeds")
-            (System.nanoTime() - t) / 1e9
-          }
-          seedTime(256) // JIT warm-up, discarded
-          val t1024 = seedTime(1024)
-          val t4096 = seedTime(4096)
-          val ratio = t4096 / math.max(t1024, 1e-9)
-          println(f"seeding 1024 -> 4096 cells   ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-            f"flat $t1024%.2f s -> two-level $t4096%.2f s, x$ratio%.1f (flat x4-k would be ~x16)")
-          if (ratio > 8) {
-            failed = true
-            println(f"seeding growth x$ratio%.1f is not sub-quadratic — two-level walk regressed")
-          }
-        } catch {
-          case e: Throwable =>
-            failed = true
-            println(s"seeding cost FAILED: ${e.getClass.getSimpleName}: " +
-              String.valueOf(e.getMessage).take(300))
+      stage("seeding 1024 -> 4096 cells") {
+        // the zero-norm filter is part of fit()'s pool (KMeans.scala:
+        // a zero vector in the head makes gonzalez cosines NaN and
+        // seedIndices non-distinct) — mirror it or the measured pool
+        // is not fit's real one on a corpus with failed-embedding rows
+        def pool(k: Int): Array[(Long, Array[Float])] = embs
+          .where(VectorFunctions.vecDot(col("embedding"), col("embedding")) > 0)
+          .orderBy(xxhash64(col("vec_id")), col("vec_id"))
+          .limit(math.max(8 * k, 1024))
+          .select(col("vec_id"), col("embedding")).collect()
+          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+        def seedTime(k: Int): Double = {
+          val p = pool(k)
+          val t = System.nanoTime()
+          val s = KMeans.seedIndices(p, k)
+          assert(s.length == k && s.distinct.length == k,
+            s"seedIndices($k) must return k distinct seeds")
+          (System.nanoTime() - t) / 1e9
         }
+        seedTime(256) // JIT warm-up, discarded
+        val t1024 = seedTime(1024)
+        val t4096 = seedTime(4096)
+        val ratio = t4096 / math.max(t1024, 1e-9)
+        check(ratio <= 8,
+          f"seeding growth x$ratio%.1f is not sub-quadratic — two-level walk regressed")
+        f"flat $t1024%.2f s -> two-level $t4096%.2f s, x$ratio%.1f (flat x4-k would be ~x16)"
       }
       // the upper IvfCellTiers, forced on this corpus: 256 cells (literal
       // tier ceiling), 1024 cells — the √N tier whose assignment runs
@@ -866,19 +841,18 @@ object ScaleSmoke {
       // the tier (ivfNProbeFor); same .75 fitted bar as the home tier.
       for (cells <- Seq(256, 1024, 4096)) {
         sampleRecall(f"recall: ss4 IVF ${cells}c (fitted)", {
-          val m = graft.operators.KMeans.fit(embs, k = cells, maxIters = 3)
-          graft.operators.Similarity.ivfCellPairs(
-            graft.operators.KMeans.assignTopCells(embs, m.centroids,
-              graft.operators.Similarity.ivfNProbeFor(cells)), 0.4,
-            indexBcast = graft.operators.Similarity.ivfIndexBroadcastable(
-              embs, 4L * graft.operators.Similarity.ivfNProbeFor(cells)))
+          val m = KMeans.fit(embs, k = cells, maxIters = 3)
+          Similarity.ivfCellPairs(
+            KMeans.assignTopCells(embs, m.centroids, Similarity.ivfNProbeFor(cells)), 0.4,
+            indexBcast = Similarity.ivfIndexBroadcastable(
+              embs, 4L * Similarity.ivfNProbeFor(cells)))
         }, 0.4, bar = 0.75)
       }
       // the top PairLshTiers geometry (4 tables × 16 bits — what a >2M-row
       // corpus gets), forced here so the tier has a measured recall number
       // before a corpus ever lands on it
       sampleRecall("recall: lshNeardup 4x16 tier",
-        graft.operators.Similarity.lshNeardupGeom(embs, 0.45, 64, Some((4, 16))),
+        Similarity.lshNeardupGeom(embs, 0.45, 64, Some((4, 16))),
         0.45, bar = 0.6)
     } finally {
       exactTruth.unpersist() // last pair-recall consumer above
@@ -890,97 +864,61 @@ object ScaleSmoke {
     // persisted table — the warm shape the bench measures since the
     // index landed). Three serves timed together so the line reflects
     // steady-state cost, not first-read planning.
-    locally {
-      val idxRoot = java.nio.file.Files.createTempDirectory("graft-smoke-ss9")
-      try {
-        val lake = graft.lake.LakeClient.local(idxRoot.toString)
-        lake.createFilesystem("smoke9")
-        timed("ss9 index build (persisted)") {
-          val m = graft.operators.IvfPq.fit(embs, cells = 64)
-          graft.operators.AnnIndex.writeIvfPq(lake, "smoke9", "ivfpq",
-            embs.where(col("vec_id") =!= 0), m)
-          lake.listPaths("smoke9", "ivfpq/codes", maxResults = Int.MaxValue)
-            .count(en => !en.isDirectory && en.name.endsWith(".parquet")).toLong
-        }
-        timed("ss9 serve x3 (persisted)") {
-          val (enc, m) =
-            graft.operators.AnnIndex.readIvfPq(spark, lake, "smoke9", "ivfpq")
-          val q = embs.where(col("vec_id") === 0)
-            .select(col("embedding")).head().getSeq[Float](0).toArray
-          var n = 0L
-          for (_ <- 1 to 3)
-            n += graft.operators.IvfPq.topK(
-              embs.where(col("vec_id") =!= 0), enc, m, q,
-              nProbe = graft.operators.Similarity.IvfNProbe,
-              topK = 10, rerank = 100).count()
-          n
-        }
-        // Batch serving on the SAME persisted index — the production
-        // batch shape for the index that matters: Q queries in ONE
-        // probed-partition pass (the driver-computed union of probed
-        // cells keeps file-level pruning; AnnIndexSpec owns row-level
-        // parity with per-query topK) vs the honest per-query loop.
-        // Recall bar: probed ss9's loud sketch-regression bar (VERDICT
-        // r11 #4 — dd3/dd5/ss4/ss5 all have asserted smoke bars).
-        try {
-          val (enc, m) =
-            graft.operators.AnnIndex.readIvfPq(spark, lake, "smoke9", "ivfpq")
-          val corpus = embs.where(col("vec_id") =!= 0)
-          val nProbe = graft.operators.Similarity.IvfNProbe
-          adcBatchStage("ss9 ADC batch", "recall: ss9 ivfpq@10",
-            recallBar = 0.6, barMsg = "ss9 recall@10", corpus,
-            q => graft.operators.IvfPq.topK(corpus, enc, m, q, nProbe, 10, 100),
-            qdf => graft.operators.IvfPq.topKBatch(corpus, enc, m, qdf,
-              nProbe, topK = 10, rerank = 100))
-        } catch {
-          case e: Throwable => // index-read setup (the stage body self-catches)
-            failed = true
-            println(s"ss9 ADC batch FAILED: ${e.getClass.getSimpleName}: " +
-              String.valueOf(e.getMessage).take(300))
-        }
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(idxRoot.toFile)
+    withLake("graft-smoke-ss9", "smoke9") { lake =>
+      val corpus = embs.where(col("vec_id") =!= 0)
+      timed("ss9 index build (persisted)") {
+        val m = IvfPq.fit(embs, cells = 64)
+        AnnIndex.writeIvfPq(lake, "smoke9", "ivfpq", corpus, m)
+        lake.listPaths("smoke9", "ivfpq/codes", maxResults = Int.MaxValue)
+          .count(en => !en.isDirectory && en.name.endsWith(".parquet")).toLong
+      }
+      timed("ss9 serve x3 (persisted)") {
+        val (enc, m) = AnnIndex.readIvfPq(spark, lake, "smoke9", "ivfpq")
+        val q = embs.where(col("vec_id") === 0)
+          .select(col("embedding")).head().getSeq[Float](0).toArray
+        var n = 0L
+        for (_ <- 1 to 3)
+          n += IvfPq.topK(corpus, enc, m, q,
+            nProbe = Similarity.IvfNProbe, topK = 10, rerank = 100).count()
+        n
+      }
+      // Batch serving on the SAME persisted index — the production
+      // batch shape for the index that matters: Q queries in ONE
+      // probed-partition pass (the driver-computed union of probed
+      // cells keeps file-level pruning; AnnIndexSpec owns row-level
+      // parity with per-query topK) vs the honest per-query loop.
+      // Recall bar: probed ss9's loud sketch-regression bar (VERDICT
+      // r11 #4 — dd3/dd5/ss4/ss5 all have asserted smoke bars).
+      adcBatchStage("ss9 ADC batch", "recall: ss9 ivfpq@10", recallBar = 0.6,
+          barMsg = "ss9 recall@10", corpus) {
+        val (enc, m) = AnnIndex.readIvfPq(spark, lake, "smoke9", "ivfpq")
+        val nProbe = Similarity.IvfNProbe
+        (q => IvfPq.topK(corpus, enc, m, q, nProbe, 10, 100),
+          qdf => IvfPq.topKBatch(corpus, enc, m, qdf, nProbe, topK = 10, rerank = 100))
       }
     }
     timed("ss8_pq (fit+encode+topk)") {
-      val m = graft.operators.ProductQuantizer.fit(embs)
-      val enc = graft.operators.ProductQuantizer.encode(embs, m)
+      val m = ProductQuantizer.fit(embs)
+      val enc = ProductQuantizer.encode(embs, m)
       val q = embs.where(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).toArray
-      graft.operators.ProductQuantizer.pqTopK(
+      ProductQuantizer.pqTopK(
         embs.where(col("vec_id") =!= 0), enc, m, q, topK = 10, rerank = 100).count()
     }
     // Multi-query ADC batch vs the per-query loop, measured on the
     // PERSISTED flat-PQ index (the round-6 decision gated adoption on
     // exactly this: a disk-resident index, where one pass over the
-    // coded table serving Q queries replaces Q passes). The loop side
-    // is the honest per-query serving cost INCLUDING its per-job
-    // planning — that is what a caller without the batch API pays.
-    locally {
-      val idxRoot = java.nio.file.Files.createTempDirectory("graft-smoke-batch")
-      try {
-        val lake = graft.lake.LakeClient.local(idxRoot.toString)
-        lake.createFilesystem("b")
-        val model = graft.operators.ProductQuantizer.fit(embs)
-        graft.operators.AnnIndex.writePq(lake, "b", "pq",
-          embs.where(col("vec_id") =!= 0), model)
-        val (enc, back) = graft.operators.AnnIndex.readPq(spark, lake, "b", "pq")
-        val corpus = embs.where(col("vec_id") =!= 0)
-        // recall bar: flat PQ scans the WHOLE coded table and exact-
-        // re-ranks a 100-deep shortlist, so its bar is stiffer than
-        // probed ss9's.
-        adcBatchStage("pq ADC batch", "recall: ss8 pq@10",
-          recallBar = 0.7, barMsg = "ss8 recall@10", corpus,
-          q => graft.operators.ProductQuantizer.pqTopK(corpus, enc, back, q, 10, 100),
-          qdf => graft.operators.ProductQuantizer.pqTopKBatch(
-            corpus, enc, back, qdf, topK = 10, rerank = 100))
-      } catch {
-        case e: Throwable => // fit/write/read setup (the stage self-catches)
-          failed = true
-          println(s"pq ADC batch FAILED: ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(300))
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(idxRoot.toFile)
+    // coded table serving Q queries replaces Q passes). Recall bar:
+    // flat PQ scans the WHOLE coded table and exact-re-ranks a 100-deep
+    // shortlist, so its bar is stiffer than probed ss9's.
+    withLake("graft-smoke-batch", "b") { lake =>
+      val corpus = embs.where(col("vec_id") =!= 0)
+      adcBatchStage("pq ADC batch", "recall: ss8 pq@10", recallBar = 0.7,
+          barMsg = "ss8 recall@10", corpus) {
+        AnnIndex.writePq(lake, "b", "pq", corpus, ProductQuantizer.fit(embs))
+        val (enc, back) = AnnIndex.readPq(spark, lake, "b", "pq")
+        (q => ProductQuantizer.pqTopK(corpus, enc, back, q, 10, 100),
+          qdf => ProductQuantizer.pqTopKBatch(corpus, enc, back, qdf, topK = 10, rerank = 100))
       }
     }
     // Persisted-index lifecycle, with the question a 100 TB operator
@@ -994,14 +932,10 @@ object ScaleSmoke {
     // transform): every pairwise cosine among the new rows is EXACTLY
     // preserved, but their positions relative to the stale centroids
     // are fully scrambled — the honest worst case, where the stale
-    // cells are effectively random for the appended slice. Append the
-    // drifted 2× growth under the stale model via the real
-    // write→append→read path, then measure the re-fit signal with the
-    // OPERATOR API itself — AnnIndex.driftCheck over a bounded
-    // hash-ordered sample of drifted-slice queries (recent appends:
-    // exactly where drift bites) — at the 256c/p12 operating point
-    // (probed fraction 12/256 ≈ 4.7%, the production-shaped scan
-    // share). Deterministic (seeded transform, bit-deterministic fits,
+    // cells are effectively random for the appended slice. The drifted
+    // 2× growth is measured at the 256c/p12 operating point (probed
+    // fraction 12/256 ≈ 4.7%, the production-shaped scan share).
+    // Deterministic (seeded transform, bit-deterministic fits,
     // hash-ordered sample). MEASURED CORRECTION (round 8): the round-7
     // single-query numbers (stale .20 vs refit .50 at 64c/p6) were
     // query-sampling luck — at a 16-32-query sample the fixture shows
@@ -1015,46 +949,16 @@ object ScaleSmoke {
     // as cells grow finer. driftCheck is the instrument a production
     // corpus (clustered, where geometry matters) points at its own
     // data; the bars here are collapse detectors at the measured
-    // levels, not gap assertions.
-    locally {
-      val t0 = System.nanoTime()
-      val idxRoot = java.nio.file.Files.createTempDirectory("graft-smoke-index")
-      try {
-        val lake = graft.lake.LakeClient.local(idxRoot.toString)
-        lake.createFilesystem("smoke")
-        val base = graft.tables.Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding"))
-        val drifted = orthogonalDrift(base)
-        val staleModel = graft.operators.IvfPq.fit(base, cells = 256)
-        graft.operators.AnnIndex.writeIvfPq(lake, "smoke", "drift", base, staleModel)
-        graft.operators.AnnIndex.appendIvfPq(lake, "smoke", "drift", drifted)
-        val report = graft.operators.AnnIndex.driftCheck(lake, "smoke", "drift",
-          corpus = base.unionByName(drifted), queries = drifted,
-          topK = 10, rerank = 100, maxQueries = 32)
-        println(f"index drift @2x append       ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-          f"stale ${report.staleRecall}%.2f vs refit ${report.refitRecall}%.2f " +
-          f"recall@10 (256c/p12, ${report.queries} queries, " +
-          f"gain ${report.refitRecall - report.staleRecall}%+.2f)")
-        if (report.staleRecall < 0.2 || report.refitRecall < 0.3) {
-          failed = true
-          println(f"drift recall collapsed below the (.20 stale / .30 refit) bars")
-        }
-        // the flip side of the clustered stage below: on an ISOTROPIC
-        // corpus any well-spread cell geometry is near-equivalent, so
-        // the refit decision at minGain=.15 must come back "don't"
-        // (measured gain ≈ +.04 at this operating point)
-        if (report.refitPays(0.15)) {
-          failed = true
-          println(f"refitPays(0.15) fired on the isotropic corpus — threshold too twitchy")
-        }
-      } catch {
-        case e: Throwable =>
-          failed = true
-          println(s"index drift FAILED: ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(300))
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(idxRoot.toFile)
-      }
+    // levels, not gap assertions. The flip side of the clustered stage
+    // below: on an ISOTROPIC corpus any well-spread cell geometry is
+    // near-equivalent, so the refit decision at minGain=.15 must come
+    // back "don't" (measured gain ≈ +.04 at this operating point).
+    driftStage("index drift @2x append", "256c/p12, ", Some(256), orthogonalDriftPair(),
+        maxQueries = 32) { r => Seq(
+      (r.staleRecall >= 0.2 && r.refitRecall >= 0.3,
+        "drift recall collapsed below the (.20 stale / .30 refit) bars"),
+      (!r.refitPays(0.15),
+        "refitPays(0.15) fired on the isotropic corpus — threshold too twitchy"))
     }
     // The same driftCheck instrument pointed at a corpus where staleness
     // ACTUALLY bites — the validation the isotropic fixture cannot give
@@ -1072,36 +976,10 @@ object ScaleSmoke {
     // configuration: stale .475 vs refit .738 → refitPays(0.15) must
     // fire here, and must NOT fire on the isotropic stage above — the
     // minGain threshold validated against a real gap and a real no-gap.
-    locally {
-      val t0 = System.nanoTime()
-      val idxRoot = java.nio.file.Files.createTempDirectory("graft-smoke-cdrift")
-      try {
-        val lake = graft.lake.LakeClient.local(idxRoot.toString)
-        lake.createFilesystem("cdrift")
-        val (base, drifted) = clusteredDriftPair()
-        val staleModel = graft.operators.IvfPq.fit(base, cells = 64)
-        graft.operators.AnnIndex.writeIvfPq(lake, "cdrift", "drift", base, staleModel)
-        graft.operators.AnnIndex.appendIvfPq(lake, "cdrift", "drift", drifted)
-        val report = graft.operators.AnnIndex.driftCheck(lake, "cdrift", "drift",
-          corpus = base.unionByName(drifted), queries = drifted,
-          topK = 10, rerank = 100, maxQueries = 16)
-        println(f"index drift (clustered)      ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-          f"stale ${report.staleRecall}%.2f vs refit ${report.refitRecall}%.2f " +
-          f"recall@10 (64c, ${report.queries} queries, " +
-          f"gain ${report.refitRecall - report.staleRecall}%+.2f)")
-        if (!report.refitPays(0.15)) {
-          failed = true
-          println(f"refitPays(0.15) did NOT fire on the clustered-drift corpus — " +
-            f"the re-fit signal is broken (gain ${report.refitRecall - report.staleRecall}%+.2f)")
-        }
-      } catch {
-        case e: Throwable =>
-          failed = true
-          println(s"index drift (clustered) FAILED: ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(300))
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(idxRoot.toFile)
-      }
+    driftStage("index drift (clustered)", "64c, ", Some(64), clusteredDriftPair(),
+        maxQueries = 16) { r => Seq(
+      (r.refitPays(0.15), "refitPays(0.15) did NOT fire on the clustered-drift corpus — " +
+        f"the re-fit signal is broken (gain ${r.refitRecall - r.staleRecall}%+.2f)"))
     }
     // FLAT-PQ codebook drift — driftCheckPq validated against the drift
     // shape where codebook staleness ACTUALLY bites, which measurement
@@ -1121,45 +999,16 @@ object ScaleSmoke {
     // reallocates codewords to the new range; cosine truth is
     // scale-invariant, so the instrument is clean). refitPays(0.15)
     // must fire here.
-    locally {
-      val t0 = System.nanoTime()
-      val idxRoot = java.nio.file.Files.createTempDirectory("graft-smoke-pqdrift")
-      try {
-        val lake = graft.lake.LakeClient.local(idxRoot.toString)
-        lake.createFilesystem("pqdrift")
-        val (base, driftedClusters) = clusteredDriftPair()
-        // range drift: the appended slice additionally scaled x10
-        val drifted = driftedClusters
-          .select(col("vec_id"), transform(col("embedding"),
-            x => (x * 10.0f).cast("float")).as("embedding"))
-        val staleModel = graft.operators.ProductQuantizer.fit(base)
-        graft.operators.AnnIndex.writePq(lake, "pqdrift", "pq", base, staleModel)
-        graft.operators.AnnIndex.appendPq(lake, "pqdrift", "pq", drifted)
-        val report = graft.operators.AnnIndex.driftCheckPq(lake, "pqdrift", "pq",
-          corpus = base.unionByName(drifted), queries = drifted,
-          topK = 10, rerank = 100, maxQueries = 16)
-        println(f"pq codebook drift (range)    ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-          f"stale ${report.staleRecall}%.2f vs refit ${report.refitRecall}%.2f " +
-          f"recall@10 (${report.queries} queries, " +
-          f"gain ${report.refitRecall - report.staleRecall}%+.2f)")
-        if (!report.refitPays(0.15)) {
-          failed = true
-          println(f"refitPays(0.15) did NOT fire on the range-drifted codebook — " +
-            f"the PQ re-fit signal is broken (gain ${report.refitRecall - report.staleRecall}%+.2f)")
-        }
-        if (report.refitRecall < 0.3) {
-          failed = true
-          println(f"refit recall ${report.refitRecall}%.2f collapsed below the .30 bar — " +
-            "the refit itself no longer covers the drifted range")
-        }
-      } catch {
-        case e: Throwable =>
-          failed = true
-          println(s"pq codebook drift FAILED: ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(300))
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(idxRoot.toFile)
-      }
+    driftStage("pq codebook drift (range)", "", None, {
+      val (base, driftedClusters) = clusteredDriftPair()
+      // range drift: the appended slice additionally scaled x10
+      (base, driftedClusters.select(col("vec_id"), transform(col("embedding"),
+        x => (x * 10.0f).cast("float")).as("embedding")))
+    }, maxQueries = 16) { r => Seq(
+      (r.refitPays(0.15), "refitPays(0.15) did NOT fire on the range-drifted codebook — " +
+        f"the PQ re-fit signal is broken (gain ${r.refitRecall - r.staleRecall}%+.2f)"),
+      (r.refitRecall >= 0.3, f"refit recall ${r.refitRecall}%.2f collapsed below the .30 bar — " +
+        "the refit itself no longer covers the drifted range"))
     }
     // The no-drift control for driftCheckPq, mirroring the isotropic IVF
     // stage above: orthogonal drift (coordinate permutation + sign
@@ -1168,41 +1017,11 @@ object ScaleSmoke {
     // appended slice and the refit decision at minGain=.15 must come
     // back "don't" (measured stale .57 vs refit .62, gain +.05, at the
     // shipped fit defaults).
-    locally {
-      val t0 = System.nanoTime()
-      val idxRoot = java.nio.file.Files.createTempDirectory("graft-smoke-pqiso")
-      try {
-        val lake = graft.lake.LakeClient.local(idxRoot.toString)
-        lake.createFilesystem("pqiso")
-        val base = graft.tables.Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding"))
-        val drifted = orthogonalDrift(base)
-        val staleModel = graft.operators.ProductQuantizer.fit(base)
-        graft.operators.AnnIndex.writePq(lake, "pqiso", "pq", base, staleModel)
-        graft.operators.AnnIndex.appendPq(lake, "pqiso", "pq", drifted)
-        val report = graft.operators.AnnIndex.driftCheckPq(lake, "pqiso", "pq",
-          corpus = base.unionByName(drifted), queries = drifted,
-          topK = 10, rerank = 100, maxQueries = 16)
-        println(f"pq codebook drift (control)  ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-          f"stale ${report.staleRecall}%.2f vs refit ${report.refitRecall}%.2f " +
-          f"recall@10 (${report.queries} queries, " +
-          f"gain ${report.refitRecall - report.staleRecall}%+.2f)")
-        if (report.refitPays(0.15)) {
-          failed = true
-          println(f"refitPays(0.15) fired on the isotropic PQ control — threshold too twitchy")
-        }
-        if (report.staleRecall < 0.3 || report.refitRecall < 0.3) {
-          failed = true
-          println(f"pq control recall collapsed below the .30 bars")
-        }
-      } catch {
-        case e: Throwable =>
-          failed = true
-          println(s"pq codebook drift (control) FAILED: ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(300))
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(idxRoot.toFile)
-      }
+    driftStage("pq codebook drift (control)", "", None, orthogonalDriftPair(),
+        maxQueries = 16) { r => Seq(
+      (!r.refitPays(0.15),
+        "refitPays(0.15) fired on the isotropic PQ control — threshold too twitchy"),
+      (r.staleRecall >= 0.3 && r.refitRecall >= 0.3, "pq control recall collapsed below the .30 bars"))
     }
     // The maintenance loop a drip-fed index lives by, driven END TO END
     // at the 20× corpus: build the persisted cell-partitioned IVF-PQ
@@ -1213,70 +1032,51 @@ object ScaleSmoke {
     // file-level partition pruning, file count back at O(cells). This
     // is the daily-cadence composition (append → compact → serve) whose
     // halves were previously only tested apart.
-    locally {
-      val t0 = System.nanoTime()
-      val idxRoot = java.nio.file.Files.createTempDirectory("graft-smoke-maint")
-      try {
-        val lake = graft.lake.LakeClient.local(idxRoot.toString)
-        lake.createFilesystem("maint")
-        val model = graft.operators.IvfPq.fit(embs, cells = 64)
-        graft.operators.AnnIndex.writeIvfPq(lake, "maint", "ivfpq",
-          embs.where(col("vec_id") =!= 0), model)
+    stage("index append->compact->serve") {
+      withLake("graft-smoke-maint", "maint") { lake =>
+        val model = IvfPq.fit(embs, cells = 64)
+        AnnIndex.writeIvfPq(lake, "maint", "ivfpq", embs.where(col("vec_id") =!= 0), model)
         def codeFiles(): Int =
           lake.listPaths("maint", "ivfpq/codes", maxResults = Int.MaxValue)
             .count(en => !en.isDirectory && en.name.endsWith(".parquet"))
         val built = codeFiles()
         // 4 drip appends (the unreplicated table, fresh ids each time)
-        val baseTab = graft.tables.Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding"))
+        val baseTab = unreplicated()
         val slices = (1 to 4).map(r => baseTab
           .select((col("vec_id") + r * 10000000L).as("vec_id"), col("embedding")))
-        slices.foreach(s =>
-          graft.operators.AnnIndex.appendIvfPq(lake, "maint", "ivfpq", s))
+        slices.foreach(s => AnnIndex.appendIvfPq(lake, "maint", "ivfpq", s))
         val fragmented = codeFiles()
         val q = embs.where(col("vec_id") === 0)
           .select(col("embedding")).head().getSeq[Float](0).toArray
         val corpus = slices.foldLeft(embs.where(col("vec_id") =!= 0))(_ unionByName _)
         def serve(): (Seq[(Long, Double)], String) = {
-          val (enc, m) =
-            graft.operators.AnnIndex.readIvfPq(spark, lake, "maint", "ivfpq")
-          val top = graft.operators.IvfPq.topK(corpus, enc, m, q,
-            nProbe = graft.operators.Similarity.ivfNProbeFor(64),
-            topK = 10, rerank = 100)
+          val (enc, m) = AnnIndex.readIvfPq(spark, lake, "maint", "ivfpq")
+          val top = IvfPq.topK(corpus, enc, m, q,
+            nProbe = Similarity.ivfNProbeFor(64), topK = 10, rerank = 100)
           (top.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq,
             top.queryExecution.executedPlan.toString)
         }
         val (before, _) = serve()
-        val (nParts, nFiles) =
-          lake.compactPartitionedParquet(spark, "maint", "ivfpq/codes")
+        val (nParts, nFiles) = lake.compactPartitionedParquet(spark, "maint", "ivfpq/codes")
         val (after, plan) = serve()
-        assert(after == before,
-          "compaction must not change what the served index returns")
+        assert(after == before, "compaction must not change what the served index returns")
         assert(plan.contains("PartitionFilters: [") && plan.contains("cell"),
           s"cell partition pruning must survive compaction:\n$plan")
         assert(nFiles < fragmented && codeFiles() == nFiles,
           s"compaction must shrink files: $fragmented -> $nFiles")
         assert(nFiles <= 2 * 64,
           s"compacted file count must be O(cells): $nFiles files for 64 cells")
-        println(f"index append->compact->serve ${(System.nanoTime() - t0) / 1e9}%8.1f s  " +
-          f"files $built -> $fragmented -> $nFiles ($nParts cells), topK identical, pruning intact")
-      } catch {
-        case e: Throwable =>
-          failed = true
-          println(s"index maintenance FAILED: ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(300))
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(idxRoot.toFile)
+        s"files $built -> $fragmented -> $nFiles ($nParts cells), topK identical, pruning intact"
       }
     }
 
     timed("cp3_pack (sharded cumsum)") {
       // replicated corpus: proves the hash-sharded packing window scales
       // by sharding, not by a single global sort
-      graft.operators.CorpusPipeline.packSequences(docs).count()
+      CorpusPipeline.packSequences(docs).count()
     }
     timed("cp4_epoch_mix (fractional)") {
-      graft.operators.CorpusPipeline.epochMix(
+      CorpusPipeline.epochMix(
         docs.withColumn("source", (col("doc_id") % 20).cast("string")),
         "source", Map("0" -> 2.5, "1" -> 0.25), defaultWeight = 1.0).count()
     }
@@ -1284,14 +1084,13 @@ object ScaleSmoke {
       // the forced-LSH edge source semanticEdges picks above the exact-
       // scan byte cap — exercised explicitly so the smoke demonstrates
       // the large-corpus dd7 path regardless of in-memory stats
-      graft.operators.Dedup.dd6ClusterFrom(
+      Dedup.dd6ClusterFrom(
         embs.select(col("vec_id").as("doc_id")),
-        graft.operators.Similarity.lshNeardupPairs(embs, 0.45)
-          .select(col("vec_a"), col("vec_b"))).count()
+        Similarity.lshNeardupPairs(embs, 0.45).select(col("vec_a"), col("vec_b"))).count()
     }
 
-    println(s"smoke ${if (failed) "FAILED" else "ok"}")
+    println(s"smoke ${if (run.failed) "FAILED" else "ok"}")
     spark.stop()
-    if (failed) sys.exit(1)
+    if (run.failed) sys.exit(1)
   }
 }

@@ -9,9 +9,9 @@ import graft.tables.Tables
   * matches the actual cores instead of the 200 default.
   *
   * Lake credentials pass through to the ABFS driver exactly where the
-  * reference hand-signed each request (SharedKeyAuth,
-  * /root/reference/azure/datalake/gen2/client.py:143-178):
-  * `withAzureKey` sets `fs.azure.account.key.*` on the Hadoop conf.
+  * reference hand-signed each request (SharedKeyAuth, client.py:143-178):
+  * [[graft.lake.LakeClient.forAccount]] sets `fs.azure.account.key.*` on
+  * the Hadoop conf.
   */
 object GraftSession {
 
@@ -133,14 +133,6 @@ object GraftSession {
   def create(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Azure SharedKey pass-through (production lake access). */
-  def withAzureKey(spark: SparkSession, account: String, key: String,
-                   dnsSuffix: String = "dfs.core.windows.net"): SparkSession = {
-    spark.sparkContext.hadoopConfiguration
-      .set(s"fs.azure.account.key.$account.$dnsSuffix", key)
     spark
   }
 
