@@ -90,8 +90,7 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   def listFilesystems(prefix: Option[String] = None,
                       maxResults: Option[Int] = None): Seq[FsEntry] = {
     val all =
-      if (!fs.exists(accountRoot)) Seq.empty
-      else fs.listStatus(accountRoot).toSeq
+      listedOrEmpty(accountRoot).toSeq
         .filter(_.isDirectory)
         .map(FsEntry.of)
         .filter(e => prefix.forall(e.name.split('/').last.startsWith))
@@ -246,64 +245,104 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     *
     * Traversal is deterministic pre-order DFS with name-sorted children
     * (the DFS API's lexical listing order), which makes the token just
-    * "the last path served": resumption walks the same order, PRUNING any
-    * subtree that lies wholly at-or-before the token — no rescan of
-    * already-served branches beyond the token's ancestor chain. Driver
-    * memory stays one page regardless of directory size. */
+    * "the last path served". The listed directory is placed against the
+    * token once, before anything is listed: wholly after it (every entry
+    * is served), wholly before it (an empty page, with no listing call),
+    * or on its ancestor chain. On the chain, each child is compared by
+    * name with the token's component at the child's depth only: a smaller
+    * name is skipped with its subtree, the equal name is descended into
+    * without being served, and larger names are served. So resumption
+    * walks only the token's ancestor chain and what follows it.
+    *
+    * Each directory walked costs one listing call. A child's name is read
+    * once; its attributes (type, length, modification time) are read only
+    * if the page serves it or descends through it, so on a filesystem
+    * whose listing defers them (such as [[NioLocalFileSystem]]) a skipped
+    * child is never statted. A child that is gone by then is left out. A
+    * missing directory lists as an empty page (no status probe first), a
+    * file as itself. Driver memory stays bounded by the page size
+    * regardless of directory size. */
   def listPathsPage(filesystem: String, directory: String = "",
                     recursive: Boolean = true,
                     maxResults: Int = 5000,
                     continuation: Option[String] = None): PathPage = {
     require(maxResults > 0, "maxResults must be positive")
-    val dir = resolve(filesystem, directory)
-    if (!fs.exists(dir)) return PathPage(Seq.empty, None) // 404 -> {"paths": []}
-    val cursor: Option[Seq[String]] = continuation.map(decodeCursor)
+    val dir = fs.makeQualified(resolve(filesystem, directory))
+    val cursor = continuation.fold(IndexedSeq.empty[String])(decodeCursor)
+    val at = components(dir.toUri.getPath)
+    var p = 0 // components the listed directory shares with the cursor
+    while (p < at.length && p < cursor.length && at(p) == cursor(p)) p += 1
+    if (p < at.length && p < cursor.length && at(p) < cursor(p))
+      return PathPage(Seq.empty, None) // wholly before the cursor
+    val after = p < at.length // wholly after it; else the cursor or its ancestor
     val out = ArrayBuffer.empty[FsEntry]
     // collect one extra entry to learn whether a further page exists
     // (Long: maxResults may be Int.MaxValue)
     val want = maxResults.toLong + 1
-    def comps(st: FileStatus): Seq[String] =
-      st.getPath.toUri.getPath.split('/').toSeq.filter(_.nonEmpty)
-    // walk children of d in name order; returns false when the page (+1
-    // lookahead) is full and traversal should stop
-    def walk(d: Path): Boolean = {
-      // Bounded child selection, NOT a full-directory materialize+sort:
-      // stream the RemoteIterator (ABFS pages server-side) keeping only
-      // the `needed` name-smallest EMITTABLE children — each contributes
-      // >= 1 entry, so larger-named siblings cannot reach this page —
-      // plus the at-most-one descend-only child that is an ancestor of
-      // the cursor. Driver memory per directory level is O(page) even
-      // for a million-object flat directory (the case paging exists for).
-      val needed = math.min(want - out.size, Int.MaxValue.toLong).toInt
-      val byName = Ordering.by((st: FileStatus) => st.getPath.getName)
-      val smallest = // max-heap: dequeue evicts the largest kept name
-        scala.collection.mutable.PriorityQueue.empty[FileStatus](byName)
-      var ancestorChild: Option[FileStatus] = None
-      val it = fs.listStatusIterator(d)
-      while (it.hasNext) {
-        val st = it.next()
-        if (visible(st)) {
-          val c = comps(st)
-          if (cursor.forall(preOrderAfter(c, _))) {
-            smallest += st
-            if (smallest.size > needed) { smallest.dequeue(); () }
-          } else if (st.isDirectory && cursor.exists(isPrefixOf(c, _))) {
-            ancestorChild = Some(st) // unique: the cursor's prefix chain
+
+    // Serves d's children in name order; false once the page (+1
+    // lookahead) is full. Children at depth k compare with cursor(k);
+    // k >= cursor.length means all of them follow the cursor.
+    def walk(d: Path, k: Int): Boolean = {
+      val bound = if (k < cursor.length) cursor(k) else null
+      val dName = d.getName
+      val dPath = d.toUri.getPath
+      // Streams d's listing once (ABFS pages it server-side), keeping
+      // only the `needed` name-smallest children after `from` (each
+      // contributes >= 1 entry, so larger-named siblings cannot reach
+      // this page) and, when `onChain`, the child named `from`, on the
+      // cursor's ancestor chain: O(page) driver memory per level even for
+      // a million-object flat directory. Listed again, after the last
+      // name handled, only if a kept child was gone before it could be
+      // served and larger names were dropped.
+      def serve(from: String, onChain: Boolean): Boolean = {
+        val needed = math.min(want - out.size, Int.MaxValue.toLong).toInt
+        val smallest = // max-heap: dequeue evicts the largest kept name
+          scala.collection.mutable.PriorityQueue.empty[(String, FileStatus)](ByName)
+        var dropped = false
+        var chain, self: FileStatus = null
+        try {
+          val it = fs.listStatusIterator(d)
+          while (it.hasNext) {
+            val st = it.next()
+            val name = st.getPath.getName
+            if (name == dName && st.getPath.toUri.getPath == dPath) self = st // d is a file
+            else if (!name.endsWith(PropsSuffix)) { // hide property sidecars
+              val c = if (from == null) 1 else name.compareTo(from)
+              if (c > 0) {
+                smallest += ((name, st))
+                if (smallest.size > needed) { smallest.dequeue(); dropped = true }
+              } else if (c == 0 && onChain) chain = st
+            }
+          }
+        } catch {
+          case _: FileNotFoundException => return true // 404 -> {"paths": []}
+        }
+        if (self != null) {
+          // only the listed path itself is served as a file, and only
+          // after the cursor; any other walked one was served by its parent
+          if ((d eq dir) && after) entryOf(self).foreach(out += _)
+          return out.size < want
+        }
+        if (recursive && chain != null && entryOf(chain).exists(_.isDirectory) &&
+          !walk(chain.getPath, k + 1)) return false
+        val kept = smallest.dequeueAll.reverse
+        val it = kept.iterator
+        while (it.hasNext) {
+          val st = it.next()._2
+          entryOf(st) match {
+            case Some(e) =>
+              out += e
+              if (out.size >= want) return false
+              if (recursive && e.isDirectory && !walk(st.getPath, cursor.length)) return false
+            case None =>
           }
         }
+        !dropped || serve(kept.last._1, onChain = false)
       }
-      val children = (smallest.toSeq ++ ancestorChild).sortBy(_.getPath.getName)
-      children.forall { st =>
-        val c = comps(st)
-        val emit = cursor.forall(preOrderAfter(c, _))
-        if (emit) out += FsEntry.of(st)
-        if (out.size >= want) false
-        else if (recursive && st.isDirectory &&
-          (emit || cursor.exists(isPrefixOf(c, _)))) walk(st.getPath)
-        else true
-      }
+      serve(bound, onChain = bound != null)
     }
-    walk(dir)
+    walk(dir, if (after) cursor.length else at.length)
     val page = out.take(maxResults).toSeq
     val next =
       if (out.size > maxResults) Some(encodeCursor(page.last.name)) else None
@@ -312,6 +351,12 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
 
   private def visible(st: FileStatus): Boolean =
     !st.getPath.getName.endsWith(PropsSuffix) // hide property sidecars
+
+  /** A listed child's entry, or None if the child is gone before its
+    * attributes are read. */
+  private def entryOf(st: FileStatus): Option[FsEntry] =
+    try Some(FsEntry.of(st))
+    catch { case NioLocalFileSystem.Vanished() => None }
 
   // -- data plane: reference #12-#16 --------------------------------------
 
@@ -472,10 +517,7 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   def listPathsDF(spark: SparkSession, filesystem: String, directory: String = "",
                   recursive: Boolean = true): DataFrame = {
     val dir = resolve(filesystem, directory)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], ListingSchema)
-    if (!fs.exists(dir)) return empty
-    val top = fs.listStatus(dir).filter(visible).sortBy(_.getPath.getName)
+    val top = listedOrEmpty(dir).filter(visible).sortBy(_.getPath.getName)
     val topRows = top.map(FsEntry.of).map(e =>
       Row(e.name, e.isDirectory, e.length, e.modificationTime)).toSeq
     val topDf = spark.createDataFrame(
@@ -772,6 +814,12 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     try Some(fs.getFileStatus(p))
     catch { case _: FileNotFoundException => None }
 
+  /** The children of `dir`; none if it is missing (the reference's
+    * 404 -> empty listing), with no status probe first. */
+  private def listedOrEmpty(dir: Path): Array[FileStatus] =
+    try fs.listStatus(dir)
+    catch { case _: FileNotFoundException => Array.empty }
+
   /** Bulk read of a whole object. Hadoop's `IOUtils.readFullyToByteArray`
     * reads it one byte at a time. */
   private def readAll(p: Path): Array[Byte] = {
@@ -827,28 +875,19 @@ object LakeClient {
     java.util.Base64.getUrlEncoder.encodeToString(
       s"v1:$path".getBytes(StandardCharsets.UTF_8))
 
-  private[lake] def decodeCursor(token: String): Seq[String] = {
+  private[lake] def decodeCursor(token: String): IndexedSeq[String] = {
     val decoded = new String(
       java.util.Base64.getUrlDecoder.decode(token), StandardCharsets.UTF_8)
     require(decoded.startsWith("v1:"), s"unrecognized continuation token")
-    decoded.stripPrefix("v1:").split('/').toSeq.filter(_.nonEmpty)
+    components(decoded.stripPrefix("v1:"))
   }
 
-  /** True iff path `e` comes STRICTLY AFTER path `c` in a pre-order DFS
-    * with name-sorted children: the first differing component decides;
-    * with no differing component, the longer path (a descendant) follows
-    * its ancestor. */
-  private[lake] def preOrderAfter(e: Seq[String], c: Seq[String]): Boolean = {
-    val n = math.min(e.length, c.length)
-    var i = 0
-    while (i < n && e(i) == c(i)) i += 1
-    if (i < n) e(i) > c(i) else e.length > c.length
-  }
+  /** The non-empty `/`-separated components of a path. */
+  private def components(path: String): IndexedSeq[String] =
+    path.split('/').toIndexedSeq.filter(_.nonEmpty)
 
-  /** True iff `e` is an ancestor of (or equal to) `c` — its subtree may
-    * still contain entries after the cursor, so traversal must descend. */
-  private[lake] def isPrefixOf(e: Seq[String], c: Seq[String]): Boolean =
-    e.length <= c.length && e.indices.forall(i => e(i) == c(i))
+  /** Orders listed children by their name. */
+  private val ByName: Ordering[(String, FileStatus)] = Ordering.by(_._1)
 
   /** Schema of [[LakeClient.listPathsDF]]. */
   val ListingSchema: StructType = StructType(Seq(

@@ -2,10 +2,10 @@ package graft.lake
 
 import java.io.{File, FileNotFoundException, IOException, UncheckedIOException}
 import java.net.URI
-import java.nio.file.{FileSystemException, Files, NoSuchFileException, Paths}
+import java.nio.file.{FileSystemException, Files, NoSuchFileException, NotDirectoryException, Paths}
 import java.nio.file.attribute.{BasicFileAttributes, GroupPrincipal, UserPrincipal}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem, RemoteIterator}
 import org.apache.hadoop.fs.permission.FsPermission
 import scala.collection.mutable.ArrayBuffer
 
@@ -22,9 +22,14 @@ import scala.collection.mutable.ArrayBuffer
   *  - a status is one `readAttributes`. Owner, group and permission load
   *    on first access, as Hadoop's own local status does; loading them
   *    eagerly would resolve an owner name for every listed child;
-  *  - a listing reads one directory stream and stats each child once,
-  *    building the child's `Path` from the parent's qualified URI instead
-  *    of parsing it twice.
+  *  - a listing reads one directory stream, building each child's `Path`
+  *    from the parent's qualified URI instead of parsing it twice.
+  *    `listStatus` then stats every child; `listStatusIterator` leaves a
+  *    child unstatted until its status is first asked for an attribute,
+  *    so a caller that only reads names (a listing page skipping to its
+  *    cursor) pays no stat for them. A child gone before that first read
+  *    throws an `UncheckedIOException` caused by a `FileNotFoundException`
+  *    ([[NioLocalFileSystem.Vanished]]); `listStatus` leaves it out.
   *
   * Data streams, rename and delete are the raw filesystem's own.
   */
@@ -61,7 +66,24 @@ final class NioLocalFileSystem extends RawLocalFileSystem {
       Files.setAttribute(file, "posix:group", principals.lookupPrincipalByGroupName(groupname))
   }
 
-  override def getFileStatus(f: Path): FileStatus = {
+  override def getFileStatus(f: Path): FileStatus = stat(f)
+
+  /** Reads every child's attributes; a child removed since the directory
+    * was read is left out. */
+  override def listStatus(f: Path): Array[FileStatus] =
+    children(f).filter(_.exists).toArray[FileStatus]
+
+  /** The children as [[listStatus]] finds them, each child's attributes
+    * read when its status is first asked for one. */
+  override def listStatusIterator(f: Path): RemoteIterator[FileStatus] = {
+    val it = children(f).iterator
+    new RemoteIterator[FileStatus] {
+      override def hasNext: Boolean = it.hasNext
+      override def next(): FileStatus = it.next()
+    }
+  }
+
+  private def stat(f: Path): LazyStatus = {
     val file = pathToFile(f)
     val attrs =
       try Files.readAttributes(file.toPath, classOf[BasicFileAttributes])
@@ -71,50 +93,96 @@ final class NioLocalFileSystem extends RawLocalFileSystem {
         case e: FileSystemException =>
           throw new FileNotFoundException(s"File $f does not exist").initCause(e)
       }
-    status(attrs, new Path(file.getPath).makeQualified(getUri, getWorkingDirectory))
+    new LazyStatus(qualified(file), blockSize, file.toPath, attrs)
   }
 
-  override def listStatus(f: Path): Array[FileStatus] = {
-    val dir = getFileStatus(f)
-    if (!dir.isDirectory) return Array(dir)
-    val base = dir.getPath.toUri
+  /** Reads `f`'s directory stream once: one status per child, none of
+    * them statted yet. A file lists as its own status. */
+  private def children(f: Path): ArrayBuffer[LazyStatus] = {
+    val file = pathToFile(f)
+    val stream =
+      try Files.newDirectoryStream(file.toPath)
+      catch {
+        case _: NotDirectoryException => return ArrayBuffer(stat(f))
+        case e: NoSuchFileException =>
+          throw new FileNotFoundException(s"File $f does not exist").initCause(e)
+      }
+    val base = qualified(file).toUri
     val prefix = base.getPath.stripSuffix("/") + "/"
-    val out = ArrayBuffer.empty[FileStatus]
-    val children = Files.newDirectoryStream(pathToFile(f).toPath)
+    val out = ArrayBuffer.empty[LazyStatus]
     try {
-      val it = children.iterator()
+      val it = stream.iterator()
       while (it.hasNext) {
         val child = it.next()
         // the multi-argument URI constructor quotes the name ('%', '#',
         // spaces) exactly as Hadoop's Path constructors do
         val path = new Path(new URI(base.getScheme, base.getAuthority,
           prefix + child.getFileName.toString, null, null))
-        try out += status(Files.readAttributes(child, classOf[BasicFileAttributes]), path)
-        catch { case _: NoSuchFileException => } // removed since the directory was read
+        out += new LazyStatus(path, blockSize, child, null)
       }
-    } finally children.close()
-    out.toArray
+    } finally stream.close()
+    out
   }
 
-  private def status(a: BasicFileAttributes, path: Path): FileStatus =
-    new LazyStatus(a.size, a.isDirectory, blockSize,
-      a.lastModifiedTime.toMillis, a.lastAccessTime.toMillis, path)
+  private def qualified(file: File): Path =
+    new Path(file.getPath).makeQualified(getUri, getWorkingDirectory)
 }
 
 object NioLocalFileSystem {
-  /** A status whose owner, group and permission are read on first access,
+  /** Matches what a listed status throws when its file is gone before its
+    * attributes were read. */
+  private[lake] object Vanished {
+    def unapply(e: UncheckedIOException): Boolean = e.getCause.isInstanceOf[FileNotFoundException]
+  }
+
+  /** A status whose attributes are read from the file on first access:
+    * the basic ones (length, type, times) with one `readAttributes`
+    * unless they were known when it was made, owner, group and permission
     * with one `unix` attribute read. Like Hadoop's
-    * `DeprecatedRawLocalFileStatus`, it keeps no handle to the filesystem
-    * and finds the file again from its path. */
-  private final class LazyStatus(length: Long, isDir: Boolean, blockSize: Long,
-                                 mtime: Long, atime: Long, path: Path)
-      extends FileStatus(length, isDir, 1, blockSize, mtime, atime, null, null, null, path) {
+    * `DeprecatedRawLocalFileStatus`, it keeps no handle to the filesystem:
+    * it reads the directory entry it was listed from, or, once
+    * serialized, finds the file again from its path. If the file is gone
+    * by the first basic read, that read throws an `UncheckedIOException`
+    * whose cause is a `FileNotFoundException`. */
+  private final class LazyStatus(path: Path, blockSize: Long,
+                                 @transient private val entry: java.nio.file.Path,
+                                 known: BasicFileAttributes)
+      extends FileStatus(0, false, 1, blockSize, 0, 0, null, null, null, path) {
+    private var length, mtime, atime = 0L
+    private var dir = false
+    @volatile private var statted = false
     @volatile private var loaded = false
+    if (known != null) basics(known)
+
+    private def file = if (entry != null) entry else Paths.get(getPath.toUri.getPath)
+
+    private def basics(a: BasicFileAttributes): Unit = {
+      length = a.size
+      dir = a.isDirectory
+      mtime = a.lastModifiedTime.toMillis
+      atime = a.lastAccessTime.toMillis
+      statted = true
+    }
+
+    private def stat(): Unit = if (!statted) basics(
+      try Files.readAttributes(file, classOf[BasicFileAttributes])
+      catch {
+        case e: NoSuchFileException =>
+          val gone = new FileNotFoundException(s"File $getPath does not exist")
+          gone.initCause(e)
+          throw new UncheckedIOException(gone)
+        case e: IOException => throw new UncheckedIOException(e)
+      })
+
+    /** Reads the basic attributes; false if the file is gone. */
+    def exists: Boolean =
+      try { stat(); true }
+      catch { case Vanished() => false }
 
     private def load(): Unit = if (!loaded) synchronized {
       if (!loaded) {
         val a =
-          try Files.readAttributes(Paths.get(getPath.toUri.getPath), "unix:mode,owner,group")
+          try Files.readAttributes(file, "unix:mode,owner,group")
           catch { case e: IOException => throw new UncheckedIOException(e) }
         setPermission(new FsPermission((a.get("mode").asInstanceOf[Int] & 0x3ff).toShort))
         setOwner(a.get("owner").asInstanceOf[UserPrincipal].getName)
@@ -123,6 +191,10 @@ object NioLocalFileSystem {
       }
     }
 
+    override def getLen: Long = { stat(); length }
+    override def isDirectory: Boolean = { stat(); dir }
+    override def getModificationTime: Long = { stat(); mtime }
+    override def getAccessTime: Long = { stat(); atime }
     override def getPermission: FsPermission = { load(); super.getPermission }
     override def getOwner: String = { load(); super.getOwner }
     override def getGroup: String = { load(); super.getGroup }

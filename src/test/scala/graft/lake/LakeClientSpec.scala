@@ -2,8 +2,11 @@ package graft.lake
 
 import java.nio.file.Files
 import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermissions}
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import scala.collection.mutable
+import LakeClient.PathPage
 
 /** Semantic tests for the 16 lake operations (SURVEY.md §5.2): real
   * assertions (exists/contents/rename-moves), the reference's edge rules
@@ -405,5 +408,113 @@ class LakeClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(client.readBytes("lf", "up.bin").length == 3000)
     Files.delete(tmp)
     client.deleteFilesystem("lf")
+  }
+
+  /** Entry names of a page, relative to the filesystem's root. */
+  private def rel(filesystem: String, page: PathPage): Seq[String] =
+    page.entries.map(_.name.stripPrefix(s"${client.accountRoot.toUri.getPath}/$filesystem/"))
+
+  test("listPathsPage: a cursor from outside the listed directory places it once") {
+    client.createFilesystem("cur")
+    for (d <- Seq("a", "b", "c"); f <- Seq("1.txt", "2.txt")) client.uploadString("cur", s"$d/$f", "x")
+    client.uploadString("cur", "b/sub/3.txt", "x")
+    def tokenIn(dir: String) = client.listPathsPage("cur", dir, maxResults = 1).continuation
+    val wholeB = Seq("b/1.txt", "b/2.txt", "b/sub", "b/sub/3.txt")
+    // a token from a sibling that sorts before b: all of b follows it
+    val fromA = client.listPathsPage("cur", "b", continuation = tokenIn("a"))
+    assert(rel("cur", fromA) == wholeB && fromA.continuation.isEmpty)
+    // a token from a sibling that sorts after b: all of b precedes it
+    assert(client.listPathsPage("cur", "b", continuation = tokenIn("c")) == PathPage(Seq.empty, None))
+    // a token naming an ancestor of b/sub: its whole subtree follows it
+    val top = client.listPathsPage("cur", recursive = false, maxResults = 2)
+    assert(rel("cur", top) == Seq("a", "b"))
+    val underB = client.listPathsPage("cur", "b/sub", continuation = top.continuation)
+    assert(rel("cur", underB) == Seq("b/sub/3.txt") && underB.continuation.isEmpty)
+    val fsRoot = LakeClient.encodeCursor(s"${client.accountRoot.toUri.getPath}/cur")
+    assert(rel("cur", client.listPathsPage("cur", "b", continuation = Some(fsRoot))) == wholeB)
+    // resuming inside b keeps b's own pre-order
+    val firstOfB = client.listPathsPage("cur", "b", maxResults = 3)
+    assert(rel("cur", firstOfB) == wholeB.take(3))
+    assert(rel("cur", client.listPathsPage("cur", "b", continuation = firstOfB.continuation)) ==
+      wholeB.drop(3))
+    client.deleteFilesystem("cur")
+  }
+
+  test("listPathsPage: a cursor file replaced by a directory is followed by its children") {
+    client.createFilesystem("rep")
+    Seq("k.txt", "m", "z.txt").foreach(f => client.uploadString("rep", f, "x"))
+    val first = client.listPathsPage("rep", maxResults = 2)
+    assert(rel("rep", first) == Seq("k.txt", "m"))
+    assert(client.deletePath("rep", "m"))
+    Seq("m/1.txt", "m/2.txt").foreach(f => client.uploadString("rep", f, "x"))
+    val second = client.listPathsPage("rep", continuation = first.continuation)
+    assert(rel("rep", second) == Seq("m/1.txt", "m/2.txt", "z.txt") && second.continuation.isEmpty)
+    client.deleteFilesystem("rep")
+  }
+
+  test("listPathsPage on a file lists the file itself") {
+    client.createFilesystem("one")
+    client.uploadString("one", "a/f.txt", "abc")
+    Seq("b/g.txt", "b/h.txt").foreach(f => client.uploadString("one", f, "x"))
+    val page = client.listPathsPage("one", "a/f.txt")
+    assert(rel("one", page) == Seq("a/f.txt") && page.continuation.isEmpty)
+    assert(!page.entries.head.isDirectory && page.entries.head.length == 3)
+    assert(client.listPathsPage("one", "a/f.txt", recursive = false) == page)
+    // the file is its own last entry: resuming from it gives nothing
+    val own = LakeClient.encodeCursor(page.entries.head.name)
+    assert(client.listPathsPage("one", "a/f.txt", continuation = Some(own)) == PathPage(Seq.empty, None))
+    // a token naming its directory precedes it, one from a later sibling follows it
+    val dirA = LakeClient.encodeCursor(s"${client.accountRoot.toUri.getPath}/one/a")
+    assert(client.listPathsPage("one", "a/f.txt", continuation = Some(dirA)) == page)
+    val fromB = client.listPathsPage("one", "b", maxResults = 1).continuation
+    assert(fromB.nonEmpty)
+    assert(client.listPathsPage("one", "a/f.txt", continuation = fromB) == PathPage(Seq.empty, None))
+    client.deleteFilesystem("one")
+  }
+
+  test("listFilesystems on a missing account root is empty") {
+    val missing = LakeClient.local(rootDir.resolve("no-such-account").toString)
+    assert(missing.listFilesystems() == Seq.empty)
+    assert(missing.listPaths("fs") == Seq.empty)
+  }
+
+  /** Counts the listing and status calls a lake call makes. */
+  private final class CountingFs(inner: FileSystem) extends FilterFileSystem(inner) {
+    val calls = mutable.Map.empty[String, Int].withDefaultValue(0)
+    override def listStatusIterator(f: Path) = { calls("listStatusIterator") += 1; super.listStatusIterator(f) }
+    override def listStatus(f: Path) = { calls("listStatus") += 1; super.listStatus(f) }
+    override def getFileStatus(f: Path) = { calls("getFileStatus") += 1; super.getFileStatus(f) }
+    override def exists(f: Path) = { calls("exists") += 1; super.exists(f) }
+  }
+
+  test("listPathsPage makes one listing call per directory it walks and no status call") {
+    client.createFilesystem("calls")
+    val flat = Files.createDirectories(rootDir.resolve("calls/flat"))
+    (0 until 5010).foreach(i => Files.createFile(flat.resolve(f"f$i%05d")))
+    val counting = new CountingFs(client.fs)
+    val counted = new LakeClient(counting, client.accountRoot)
+    val first = counted.listPathsPage("calls", "flat")
+    assert(first.entries.size == 5000 && first.continuation.nonEmpty)
+    counting.calls.clear()
+    val second = counted.listPathsPage("calls", "flat", continuation = first.continuation)
+    assert(rel("calls", second) == (5000 until 5010).map(i => f"flat/f$i%05d"))
+    assert(second.continuation.isEmpty)
+    assert(counting.calls == Map("listStatusIterator" -> 1))
+
+    Seq("tree/d0/f", "tree/d1/e/f", "tree/d2/f").foreach(f => client.uploadString("calls", f, "x"))
+    counting.calls.clear()
+    val whole = counted.listPathsPage("calls", "tree")
+    assert(rel("calls", whole) ==
+      Seq("tree/d0", "tree/d0/f", "tree/d1", "tree/d1/e", "tree/d1/e/f", "tree/d2", "tree/d2/f"))
+    assert(counting.calls == Map("listStatusIterator" -> 5)) // tree, d0, d1, d1/e, d2
+    counting.calls.clear()
+    val p1 = counted.listPathsPage("calls", "tree", maxResults = 3)
+    assert(rel("calls", p1) == Seq("tree/d0", "tree/d0/f", "tree/d1"))
+    assert(counting.calls == Map("listStatusIterator" -> 3)) // tree, d0, d1
+    counting.calls.clear()
+    val p2 = counted.listPathsPage("calls", "tree", maxResults = 3, continuation = p1.continuation)
+    assert(rel("calls", p2) == Seq("tree/d1/e", "tree/d1/e/f", "tree/d2"))
+    assert(counting.calls == Map("listStatusIterator" -> 4)) // tree, d1, d1/e, d2
+    client.deleteFilesystem("calls")
   }
 }

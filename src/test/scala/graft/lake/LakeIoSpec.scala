@@ -293,6 +293,9 @@ class LakeIoSpec extends AnyFunSuite with GraftSuite {
     assert(fromDf.size == 48) // 15 + (15 dirs + 15 leaves) + d1 + d2 + root.txt
     // non-recursive stays shallow
     assert(client.listPathsDF(spark, "cat", recursive = false).count() == 3)
+    // a missing directory is an empty frame, as the reference's 404
+    val missing = client.listPathsDF(spark, "cat", "no/such/dir")
+    assert(missing.schema == LakeClient.ListingSchema && missing.count() == 0)
     // distributed: the subtree scan runs on >1 partition when dirs allow
     assert(df.rdd.getNumPartitions > 1)
     client.deleteFilesystem("cat")
