@@ -16,9 +16,10 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Operation mapping (SURVEY.md §2.1; reference lines cited per method):
   * filesystems are directories under an account root; paths are files or
-  * directories; properties are a sidecar JSON map (portable where xattrs
-  * are not); leases are advisory no-ops delegated to the ABFS driver +
-  * output-commit protocol (SURVEY.md §7.4).
+  * directories; a path's properties are its one `user.graft.props`
+  * extended attribute (ABFS keeps xattrs as the path's `x-ms-properties`),
+  * so they move with a rename and die with a delete; leases are advisory
+  * no-ops delegated to the ABFS driver + output-commit protocol (SURVEY.md §7.4).
   *
   * Deliberate fixes vs the reference, preserved quirks documented inline:
   *  - `get_properties_filesystem` returned `response.json()` of a body-less
@@ -99,99 +100,43 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   }
 
   /** get_properties_filesystem — client.py:292-306. The reference parses a
-    * body-less HEAD as JSON (always raises); here properties round-trip
-    * from the sidecar. */
+    * body-less HEAD as JSON (always raises); here properties round-trip.
+    * A missing filesystem has none. */
   def getFilesystemProperties(filesystem: String): Map[String, String] =
-    readProps(propsPath(fsRoot(filesystem)))
+    readProps(fsRoot(filesystem))
 
-  /** set_properties_filesystem — client.py:308-325 (x-ms-properties). */
+  /** set_properties_filesystem — client.py:308-325 (x-ms-properties). A
+    * missing filesystem is an error, as the reference PATCH 404s. */
   def setFilesystemProperties(filesystem: String, properties: Map[String, String]): Unit =
-    writeProps(propsPath(fsRoot(filesystem)), properties)
+    writeProps(fsRoot(filesystem), properties, s"setFilesystemProperties: no such filesystem: $filesystem")
 
   // -- path lifecycle: reference #6-#11 -----------------------------------
 
   /** create_path — client.py:329-356; resource=file|directory. */
   def createPath(filesystem: String, path: String, directory: Boolean = false): Unit = {
     val p = resolve(filesystem, path)
-    if (directory) fs.mkdirs(p)
-    else {
-      // overwrite semantics: a re-created file must NOT inherit the
-      // replaced file's properties (deletePath/renamePath keep the same
-      // invariant; ADLS PUT ?resource=file resets properties)
-      fs.delete(fileSidecar(p), false)
-      fs.create(p, true).close() // zero-byte stage, like PUT ?resource=file
-    }
+    // zero-byte stage, like PUT ?resource=file; an overwrite drops properties
+    if (directory) fs.mkdirs(p) else fs.create(p, true).close()
   }
 
   /** rename_file — client.py:358-395. The reference needs a content-length
     * lookup first (client.py:377-384); `FileSystem.rename` is atomic on
-    * HNS-enabled ADLS and needs none. Missing source → false (the
-    * reference raises "File not found"). */
-  def renamePath(filesystem: String, source: String, dest: String): Boolean = {
-    val src = resolve(filesystem, source)
-    // missing source -> false, mirroring the reference's explicit
-    // pre-check (client.py:377-384); some FileSystem impls throw instead
-    val isDir = statusOf(src) match {
-      case Some(st) => st.isDirectory
-      case None => return false
-    }
-    val dst = resolve(filesystem, dest)
-    // POSIX/HDFS rename semantics: renaming INTO an existing directory
-    // lands the source at dst/<srcName> — the sidecar must follow the
-    // file's ACTUAL landing spot, not the raw dest argument
-    val landed =
-      if (statusOf(dst).exists(_.isDirectory)) new Path(dst, src.getName)
-      else dst
-    val ok = fs.rename(src, dst)
-    // Properties travel with the path, as in ADLS. A directory's sidecar
-    // lives inside it and moves with the rename; a file's sits beside it
-    // and must be moved explicitly.
-    if (ok && !isDir) {
-      // an overwritten target's properties die with it — clear the landing
-      // spot's sidecar even when the SOURCE has none (else the renamed
-      // file inherits the replaced file's properties)
-      val dstSidecar = fileSidecar(landed)
-      fs.delete(dstSidecar, false)
-      val srcSidecar = fileSidecar(src)
-      if (fs.exists(srcSidecar)) fs.rename(srcSidecar, dstSidecar)
-    }
-    ok
-  }
+    * HNS-enabled ADLS and needs none. Properties travel with the path;
+    * renaming into an existing directory lands the source inside it.
+    * Missing source → false (the reference raises "File not found"). */
+  def renamePath(filesystem: String, source: String, dest: String): Boolean =
+    try fs.rename(resolve(filesystem, source), resolve(filesystem, dest))
+    catch { case _: FileNotFoundException => false }
 
   /** delete_path — client.py:397-422; recursive flag. Properties die with
-    * the path (ADLS semantics): the file's property sidecar is removed so
-    * a re-created path does not inherit stale properties. A directory's
-    * sidecar lives inside it and is removed by the recursive delete. */
-  def deletePath(filesystem: String, path: String, recursive: Boolean = false): Boolean = {
-    val p = resolve(filesystem, path)
-    val isDir = statusOf(p).exists(_.isDirectory)
-    val ok =
-      if (isDir && !recursive) {
-        // a directory's props sidecar lives INSIDE it and is hidden from
-        // listings — a directory that LISTS as empty must still delete
-        // non-recursively. Attempt the delete FIRST and drop the sidecar
-        // only on the not-empty failure path (and only when it is the
-        // sole child): deleting it up front would destroy the
-        // directory's properties even when the delete then fails (e.g. a
-        // child created between the listing and the delete).
-        try fs.delete(p, false)
-        catch {
-          case e: java.io.IOException =>
-            val kids = fs.listStatus(p)
-            if (kids.length == 1 && kids(0).getPath.getName == PropsFileName) {
-              fs.delete(kids(0).getPath, false)
-              fs.delete(p, false)
-            } else throw e // genuinely non-empty: props survive with the dir
-        }
-      } else fs.delete(p, recursive)
-    if (ok && !isDir) fs.delete(fileSidecar(p), false)
-    ok
-  }
+    * the path (ADLS semantics). */
+  def deletePath(filesystem: String, path: String, recursive: Boolean = false): Boolean =
+    fs.delete(resolve(filesystem, path), recursive)
 
   /** get_properties_path action=getStatus — client.py:424-447. */
   def pathStatus(filesystem: String, path: String): Option[PathInfo] = {
     val p = resolve(filesystem, path)
-    statusOf(p).map(st => PathInfo.of(st, readProps(propsPath(p, st.isDirectory))))
+    statusOf(p).map(st => PathInfo.of(st, readProps(p)))
   }
 
   /** get_properties_path action=getAccessControl — client.py:429-438.
@@ -306,14 +251,12 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
           while (it.hasNext) {
             val st = it.next()
             val name = st.getPath.getName
+            val c = if (from == null) 1 else name.compareTo(from)
             if (name == dName && st.getPath.toUri.getPath == dPath) self = st // d is a file
-            else if (!name.endsWith(PropsSuffix)) { // hide property sidecars
-              val c = if (from == null) 1 else name.compareTo(from)
-              if (c > 0) {
-                smallest += ((name, st))
-                if (smallest.size > needed) { smallest.dequeue(); dropped = true }
-              } else if (c == 0 && onChain) chain = st
-            }
+            else if (c > 0) {
+              smallest += ((name, st))
+              if (smallest.size > needed) { smallest.dequeue(); dropped = true }
+            } else if (c == 0 && onChain) chain = st
           }
         } catch {
           case _: FileNotFoundException => return true // 404 -> {"paths": []}
@@ -349,9 +292,6 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     PathPage(page, next)
   }
 
-  private def visible(st: FileStatus): Boolean =
-    !st.getPath.getName.endsWith(PropsSuffix) // hide property sidecars
-
   /** A listed child's entry, or None if the child is gone before its
     * attributes are read. */
   private def entryOf(st: FileStatus): Option[FsEntry] =
@@ -360,9 +300,13 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
 
   // -- data plane: reference #12-#16 --------------------------------------
 
-  /** read_path — client.py:528-546 (`Range: bytes=0-`). Whole object. */
-  def readBytes(filesystem: String, path: String): Array[Byte] =
-    readAll(resolve(filesystem, path))
+  /** read_path — client.py:528-546 (`Range: bytes=0-`). Whole object, in
+    * bulk: Hadoop's `IOUtils.readFullyToByteArray` reads one byte at a time. */
+  def readBytes(filesystem: String, path: String): Array[Byte] = {
+    val in = fs.open(resolve(filesystem, path))
+    try in.readAllBytes()
+    finally in.close()
+  }
 
   /** Ranged read — the `Range: bytes=o-` form Parquet column-chunk reads
     * use (SURVEY.md §3.3): seek + bounded read via FSDataInputStream. */
@@ -398,9 +342,7 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     // a zero-length buffer makes InputStream.read return 0 (not -1)
     // forever — copyStream would hang, not error
     require(chunkSize > 0, s"upload: chunkSize ($chunkSize) must be > 0")
-    val p = resolve(filesystem, path)
-    fs.delete(fileSidecar(p), false) // overwrite resets properties (see createPath)
-    val out = fs.create(p, true)
+    val out = fs.create(resolve(filesystem, path), true) // an overwrite starts with no properties
     try copyStream(in, out, chunkSize)
     finally out.close()
   }
@@ -429,18 +371,12 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     finally out.close()
   }
 
-  /** update_path action=setProperties — client.py:587,602. Requires the
-    * path to exist (the reference PATCH 404s on a missing path):
-    * without the check, properties set on a not-yet-created DIRECTORY
-    * landed in a file-style sidecar the directory's later reads never
-    * consult — silently lost, with the orphan sidecar left behind. */
+  /** update_path action=setProperties — client.py:587,602. Replaces the
+    * path's whole property map in one call. A missing path is an error, as
+    * the reference PATCH 404s. */
   def setPathProperties(filesystem: String, path: String,
-                        properties: Map[String, String]): Unit = {
-    val p = resolve(filesystem, path)
-    val st = statusOf(p)
-    require(st.nonEmpty, s"setPathProperties: no such path: $path")
-    writeProps(propsPath(p, st.get.isDirectory), properties)
-  }
+                        properties: Map[String, String]): Unit =
+    writeProps(resolve(filesystem, path), properties, s"setPathProperties: no such path: $path")
 
   /** update_path action=setAccessControl — client.py:587-588 with the
     * x-ms-acl / x-ms-permissions / x-ms-owner / x-ms-group attrs of the
@@ -499,8 +435,9 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     aclStatus(filesystem, path)
   }
 
+  /** A missing path has no properties. */
   def getPathProperties(filesystem: String, path: String): Map[String, String] =
-    readProps(propsPath(resolve(filesystem, path)))
+    readProps(resolve(filesystem, path))
 
   // -- DataFrame surface (BASELINE.json `spark_approach`) -----------------
 
@@ -517,7 +454,7 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   def listPathsDF(spark: SparkSession, filesystem: String, directory: String = "",
                   recursive: Boolean = true): DataFrame = {
     val dir = resolve(filesystem, directory)
-    val top = listedOrEmpty(dir).filter(visible).sortBy(_.getPath.getName)
+    val top = listedOrEmpty(dir).sortBy(_.getPath.getName)
     val topRows = top.map(FsEntry.of).map(e =>
       Row(e.name, e.isDirectory, e.length, e.modificationTime)).toSeq
     val topDf = spark.createDataFrame(
@@ -603,7 +540,7 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     * 100 TB lake accumulates: listings, task scheduling, and parquet
     * footer reads all scale with file COUNT, so a million drip-fed
     * 100 KB files cost more to plan than to scan. Returns the new file
-    * count. Path properties (the sidecar) survive the rewrite.
+    * count. The table directory's properties survive the rewrite.
     *
     * Crash contract: the compacted copy is fully written to
     * `<path>-__compacting__` BEFORE the original is touched; the swap
@@ -797,17 +734,6 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   def readBinary(spark: SparkSession, filesystem: String, glob: String): DataFrame =
     spark.read.format("binaryFile").load(resolve(filesystem, glob).toString)
 
-  // -- properties sidecar -------------------------------------------------
-
-  /** Sidecar location for a FILE path (beside it, hidden). */
-  private def fileSidecar(p: Path): Path =
-    new Path(p.getParent, s".${p.getName}$PropsSuffix")
-
-  private def propsPath(p: Path, isDirectory: Boolean): Path =
-    if (isDirectory) new Path(p, PropsFileName) else fileSidecar(p)
-
-  private def propsPath(p: Path): Path = propsPath(p, statusOf(p).exists(_.isDirectory))
-
   /** One status probe: None for a missing path. On ABFS every probe is an
     * HTTP HEAD, so an `exists` before a `getFileStatus` costs a round trip. */
   private def statusOf(p: Path): Option[FileStatus] =
@@ -820,32 +746,24 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     try fs.listStatus(dir)
     catch { case _: FileNotFoundException => Array.empty }
 
-  /** Bulk read of a whole object. Hadoop's `IOUtils.readFullyToByteArray`
-    * reads it one byte at a time. */
-  private def readAll(p: Path): Array[Byte] = {
-    val in = fs.open(p)
-    try in.readAllBytes()
-    finally in.close()
-  }
-
-  /** Writes the sidecar at `pp`, a [[propsPath]]. */
-  private def writeProps(pp: Path, props: Map[String, String]): Unit = {
-    // keys are stored bare in the comma/equals-joined sidecar line
-    // (values are base64) — a ',' or '=' in a key would write fine and
-    // then poison EVERY later read with a parse error; validate like
-    // the ADLS x-ms-properties key contract
+  /** Stores `p`'s whole property map in its [[PropsXAttr]], one call;
+    * `missing` is the error for a missing `p`. */
+  private def writeProps(p: Path, props: Map[String, String], missing: String): Unit = {
+    // keys are stored bare in the `k=base64(v),...` line: a ',' or '=' in a
+    // key would write fine and then poison EVERY later read with a parse
+    // error; validate like the ADLS x-ms-properties key contract
     props.keys.foreach { k =>
       require(k.nonEmpty && !k.exists(c => c == ',' || c == '=' || c == '\n'),
         s"property key must be non-empty and contain no ',', '=' or newline: '$k'")
     }
-    val out = fs.create(pp, true)
-    try out.write(encodeProps(props).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    try fs.setXAttr(p, PropsXAttr, encodeProps(props).getBytes(StandardCharsets.UTF_8))
+    catch { case e: FileNotFoundException => throw new IllegalArgumentException(missing, e) }
   }
 
-  /** Reads the sidecar at `pp`, a [[propsPath]]; no sidecar, no properties. */
-  private def readProps(pp: Path): Map[String, String] =
-    try decodeProps(new String(readAll(pp), StandardCharsets.UTF_8))
+  /** `p`'s property map, one call; none for a missing path. */
+  private def readProps(p: Path): Map[String, String] =
+    try Option(fs.getXAttr(p, PropsXAttr))
+      .fold(Map.empty[String, String])(v => decodeProps(new String(v, StandardCharsets.UTF_8)))
     catch { case _: FileNotFoundException => Map.empty }
 
   private def copyStream(in: InputStream, out: OutputStream, chunkSize: Int): Long = {
@@ -861,9 +779,8 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
 }
 
 object LakeClient {
-  /** Hidden sidecar names for the x-ms-properties analogue. */
-  val PropsFileName = "._graft_props"
-  val PropsSuffix = "._graft_props"
+  /** The extended attribute holding a path's x-ms-properties analogue. */
+  private val PropsXAttr = "user.graft.props"
 
   /** One page of a listing plus the opaque token resuming after it
     * (None = listing complete) — reference `x-ms-continuation`. */
@@ -914,9 +831,7 @@ object LakeClient {
       private def fill(): Unit =
         if (buf.isEmpty && stack.nonEmpty) {
           val d = stack.pop()
-          buf = efs.listStatus(d)
-            .filter(st => !st.getPath.getName.endsWith(PropsSuffix))
-            .sortBy(_.getPath.getName).toList
+          buf = efs.listStatus(d).sortBy(_.getPath.getName).toList
           buf.foreach(st => if (st.isDirectory) stack.push(st.getPath))
           fill()
         }
@@ -949,6 +864,10 @@ object LakeClient {
     * Uses a raw, unchecksummed local filesystem: the checksummed wrapper
     * neither supports append nor keeps its .crc sidecars consistent
     * across renames, and ABFS (the production target) is not checksummed.
+    *
+    * Properties need a filesystem with user extended attributes (ext4,
+    * xfs, btrfs, or tmpfs from Linux 6.6). Elsewhere setting them fails
+    * with the JDK's "Operation not supported" error, and reads find none.
     *
     * That filesystem is [[NioLocalFileSystem]], not Hadoop's
     * `RawLocalFileSystem`. Without the native libhadoop, the latter starts

@@ -1,11 +1,15 @@
 package graft.lake
 
-import java.io.{File, FileNotFoundException, IOException, UncheckedIOException}
+import java.io.{File, FileNotFoundException, IOException, OutputStream, UncheckedIOException}
 import java.net.URI
+import java.nio.ByteBuffer
 import java.nio.file.{FileSystemException, Files, NoSuchFileException, NotDirectoryException, Paths}
-import java.nio.file.attribute.{BasicFileAttributes, GroupPrincipal, UserPrincipal}
+import java.nio.file.LinkOption.NOFOLLOW_LINKS
+import java.nio.file.StandardCopyOption.ATOMIC_MOVE
+import java.nio.file.attribute.{BasicFileAttributes, GroupPrincipal, UserDefinedFileAttributeView, UserPrincipal}
+import java.util.EnumSet
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem, RemoteIterator}
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem, RemoteIterator, XAttrSetFlag}
 import org.apache.hadoop.fs.permission.FsPermission
 import scala.collection.mutable.ArrayBuffer
 
@@ -31,7 +35,12 @@ import scala.collection.mutable.ArrayBuffer
   *    throws an `UncheckedIOException` caused by a `FileNotFoundException`
   *    ([[NioLocalFileSystem.Vanished]]); `listStatus` leaves it out.
   *
-  * Data streams, rename and delete are the raw filesystem's own.
+  * `user.` extended attributes go through the `UserDefinedFileAttributeView`
+  * and live and die with the inode, as ADLS keeps `x-ms-properties` with
+  * the path: an overwriting create unlinks the old file (Raw's `O_TRUNC`
+  * reopen keeps its attributes), and a rename always moves the inode,
+  * where Raw copies to a new one whenever `rename(2)` refuses. Data
+  * streams and delete are the raw filesystem's own.
   */
 final class NioLocalFileSystem extends RawLocalFileSystem {
   import NioLocalFileSystem.LazyStatus
@@ -68,6 +77,75 @@ final class NioLocalFileSystem extends RawLocalFileSystem {
 
   override def getFileStatus(f: Path): FileStatus = stat(f)
 
+  override protected def createOutputStreamWithMode(f: Path, append: Boolean,
+                                                    permission: FsPermission): OutputStream = {
+    val file = pathToFile(f).toPath
+    if (!append && Files.isRegularFile(file, NOFOLLOW_LINKS)) Files.deleteIfExists(file)
+    super.createOutputStreamWithMode(f, append, permission)
+  }
+
+  /** Lands `src` where `RawLocalFileSystem.rename` does: at `dst`, or at
+    * `dst/<name>` when `rename(2)` refuses because `dst` is a directory,
+    * after creating `dst`'s missing parents. A missing source throws
+    * `FileNotFoundException`. */
+  override def rename(src: Path, dst: Path): Boolean = {
+    val from = pathToFile(src).toPath
+    val to = pathToFile(dst).toPath
+    try Files.move(from, to, ATOMIC_MOVE) // rename(2), as File.renameTo
+    catch {
+      case e: FileSystemException =>
+        if (Files.notExists(from, NOFOLLOW_LINKS)) throw notFound(src, e)
+        // Raw's FileUtil.copy refuses an existing landing spot; so does a
+        // move without REPLACE_EXISTING
+        if (Files.isDirectory(to)) Files.move(from, to.resolve(from.getFileName))
+        else if (Files.notExists(to)) { Files.createDirectories(to.getParent); Files.move(from, to) }
+        else throw e
+    }
+    true
+  }
+
+  /** Sets a `user.` attribute. A value the filesystem cannot hold fails
+    * with an `IOException` naming the path and the value's size. */
+  override def setXAttr(path: Path, name: String, value: Array[Byte],
+                        flag: EnumSet[XAttrSetFlag]): Unit = {
+    val (view, attr) = userXAttr(path, name)
+    try {
+      if (!flag.containsAll(EnumSet.allOf(classOf[XAttrSetFlag])))
+        XAttrSetFlag.validate(name, view.list().contains(attr), flag)
+      view.write(attr, ByteBuffer.wrap(value))
+    } catch {
+      case e: NoSuchFileException => throw notFound(path, e)
+      case e: FileSystemException =>
+        throw new IOException(s"$path: cannot set $name to ${value.length} bytes: ${e.getReason}", e)
+    }
+  }
+
+  /** Reads a `user.` attribute with one read of up to Linux's 64 KiB
+    * `XATTR_SIZE_MAX`; null if the path has none by that name, as ABFS
+    * answers. */
+  override def getXAttr(path: Path, name: String): Array[Byte] = {
+    val (view, attr) = userXAttr(path, name)
+    try {
+      val buf = ByteBuffer.allocate(1 << 16)
+      java.util.Arrays.copyOf(buf.array, view.read(attr, buf))
+    } catch {
+      case e: NoSuchFileException => throw notFound(path, e)
+      // the JDK reports an absent attribute as a bare FileSystemException,
+      // as it does any other failure: only the listing tells them apart
+      case _: FileSystemException if !view.list().contains(attr) => null
+    }
+  }
+
+  private def userXAttr(path: Path, name: String): (UserDefinedFileAttributeView, String) = {
+    if (!name.startsWith("user."))
+      throw new IllegalArgumentException(s"only user. extended attributes are supported: $name")
+    (Files.getFileAttributeView(pathToFile(path).toPath, classOf[UserDefinedFileAttributeView]),
+      name.stripPrefix("user."))
+  }
+
+  private def notFound(f: Path, cause: Exception): Throwable =
+    new FileNotFoundException(s"File $f does not exist").initCause(cause)
+
   /** Reads every child's attributes; a child removed since the directory
     * was read is left out. */
   override def listStatus(f: Path): Array[FileStatus] =
@@ -90,8 +168,7 @@ final class NioLocalFileSystem extends RawLocalFileSystem {
       catch {
         // like RawLocalFileSystem, whose File.exists is false for any
         // path it cannot stat
-        case e: FileSystemException =>
-          throw new FileNotFoundException(s"File $f does not exist").initCause(e)
+        case e: FileSystemException => throw notFound(f, e)
       }
     new LazyStatus(qualified(file), blockSize, file.toPath, attrs)
   }
@@ -104,8 +181,7 @@ final class NioLocalFileSystem extends RawLocalFileSystem {
       try Files.newDirectoryStream(file.toPath)
       catch {
         case _: NotDirectoryException => return ArrayBuffer(stat(f))
-        case e: NoSuchFileException =>
-          throw new FileNotFoundException(s"File $f does not exist").initCause(e)
+        case e: NoSuchFileException => throw notFound(f, e)
       }
     val base = qualified(file).toUri
     val prefix = base.getPath.stripSuffix("/") + "/"

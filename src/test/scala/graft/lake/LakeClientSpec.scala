@@ -2,7 +2,9 @@ package graft.lake
 
 import java.nio.file.Files
 import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermissions}
-import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path, XAttrSetFlag}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import scala.collection.mutable
@@ -78,9 +80,8 @@ class LakeClientSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("setPathProperties on a missing path errors like the reference PATCH") {
     client.createFilesystem("mp")
-    // previously this wrote a FILE-style sidecar for the future
-    // directory that the directory's reads never consult — silently
-    // lost properties plus a hidden orphan
+    // properties set before the path exists would have nowhere to live:
+    // the future directory must start with none
     intercept[IllegalArgumentException] {
       client.setPathProperties("mp", "future-dir", Map("k" -> "v"))
     }
@@ -253,6 +254,8 @@ class LakeClientSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sidecar props files are not listed as data paths") {
+    // properties live in the path's extended attribute, so a listing
+    // holds the data paths alone
     client.createFilesystem("hid")
     client.uploadString("hid", "f.txt", "x")
     client.setPathProperties("hid", "f.txt", Map("k" -> "v"))
@@ -323,7 +326,7 @@ class LakeClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     client.setPathProperties("po", "g.txt", Map("stale" -> "yes"))
     client.createPath("po", "g.txt") // re-stage overwrites
     assert(client.getPathProperties("po", "g.txt") == Map.empty)
-    // a ',' or '=' in a KEY would poison the sidecar for every later
+    // a ',' or '=' in a KEY would poison the stored line for every later
     // read — rejected at write time (values may contain anything)
     client.uploadString("po", "h.txt", "x")
     intercept[IllegalArgumentException] {
@@ -341,8 +344,8 @@ class LakeClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     client.createFilesystem("dd")
     client.createPath("dd", "d", directory = true)
     client.setPathProperties("dd", "d", Map("k" -> "v"))
-    // the sidecar lives INSIDE the dir but is hidden from listings — a
-    // visibly-empty directory must still delete with recursive=false
+    // properties are no child of the directory: an empty directory with
+    // properties must still delete with recursive=false
     assert(client.listPaths("dd", "d").isEmpty)
     assert(client.deletePath("dd", "d", recursive = false))
     assert(client.pathStatus("dd", "d").isEmpty)
@@ -357,13 +360,13 @@ class LakeClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(client.getPathProperties("pr", "b.txt") == Map("k" -> "v"))
     client.uploadString("pr", "a.txt", "fresh")
     assert(client.getPathProperties("pr", "a.txt") == Map.empty)
-    // directory properties (sidecar inside) also move with the dir
+    // directory properties also move with the dir
     client.createPath("pr", "d1", directory = true)
     client.setPathProperties("pr", "d1", Map("dk" -> "dv"))
     assert(client.renamePath("pr", "d1", "d2"))
     assert(client.getPathProperties("pr", "d2") == Map("dk" -> "dv"))
     // rename INTO an existing directory: POSIX semantics land the file at
-    // dst/<name> — the sidecar must follow the actual landing spot
+    // dst/<name> — the properties must follow it there
     client.uploadString("pr", "c.txt", "x")
     client.setPathProperties("pr", "c.txt", Map("ck" -> "cv"))
     assert(client.renamePath("pr", "c.txt", "d2"))
@@ -375,11 +378,11 @@ class LakeClientSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("rename onto a path with a stale sidecar does not inherit its properties") {
     client.createFilesystem("ro")
-    // leave an orphaned sidecar where the rename will land (the state a
-    // rename-overwrite of a propertied file produces)
+    // a propertied file deleted behind the client's back, where the
+    // rename will land: its properties must be gone with it
     client.uploadString("ro", "b.txt", "old")
     client.setPathProperties("ro", "b.txt", Map("stale" -> "yes"))
-    client.fs.delete(client.accountRoot.suffix("/ro/b.txt"), false) // bytes only
+    client.fs.delete(client.accountRoot.suffix("/ro/b.txt"), false) // not deletePath
     client.uploadString("ro", "a.txt", "new")
     assert(client.renamePath("ro", "a.txt", "b.txt"))
     // a.txt had no properties; the landed b.txt must not resurrect old ones
@@ -478,13 +481,59 @@ class LakeClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(missing.listPaths("fs") == Seq.empty)
   }
 
-  /** Counts the listing and status calls a lake call makes. */
+  /** Counts the listing, status, data and xattr calls a lake call makes. */
   private final class CountingFs(inner: FileSystem) extends FilterFileSystem(inner) {
     val calls = mutable.Map.empty[String, Int].withDefaultValue(0)
-    override def listStatusIterator(f: Path) = { calls("listStatusIterator") += 1; super.listStatusIterator(f) }
-    override def listStatus(f: Path) = { calls("listStatus") += 1; super.listStatus(f) }
-    override def getFileStatus(f: Path) = { calls("getFileStatus") += 1; super.getFileStatus(f) }
-    override def exists(f: Path) = { calls("exists") += 1; super.exists(f) }
+    private def count[T](name: String)(call: => T): T = { calls(name) += 1; call }
+    override def listStatusIterator(f: Path) = count("listStatusIterator")(super.listStatusIterator(f))
+    override def listStatus(f: Path) = count("listStatus")(super.listStatus(f))
+    override def getFileStatus(f: Path) = count("getFileStatus")(super.getFileStatus(f))
+    override def exists(f: Path) = count("exists")(super.exists(f))
+    override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                        replication: Short, blockSize: Long, progress: Progressable) =
+      count("create")(super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
+    override def delete(f: Path, recursive: Boolean) = count("delete")(super.delete(f, recursive))
+    override def rename(src: Path, dst: Path) = count("rename")(super.rename(src, dst))
+    override def open(f: Path, bufferSize: Int) = count("open")(super.open(f, bufferSize))
+    override def getXAttr(path: Path, name: String) = count("getXAttr")(super.getXAttr(path, name))
+    override def setXAttr(path: Path, name: String, value: Array[Byte]): Unit =
+      count("setXAttr")(super.setXAttr(path, name, value))
+    override def setXAttr(path: Path, name: String, value: Array[Byte],
+                          flag: java.util.EnumSet[XAttrSetFlag]): Unit =
+      count("setXAttr")(super.setXAttr(path, name, value, flag))
+  }
+
+  test("each property, status, rename, delete, create and upload call is one or two filesystem calls") {
+    client.createFilesystem("fence")
+    client.uploadString("fence", "f.txt", "x")
+    client.setPathProperties("fence", "f.txt", Map("k" -> "v"))
+    val counting = new CountingFs(client.fs)
+    val counted = new LakeClient(counting, client.accountRoot)
+    def calls(body: => Any): Map[String, Int] = {
+      counting.calls.clear()
+      body
+      counting.calls.toMap
+    }
+    assert(calls(counted.getPathProperties("fence", "f.txt")) == Map("getXAttr" -> 1))
+    assert(calls(counted.getFilesystemProperties("fence")) == Map("getXAttr" -> 1))
+    assert(calls(counted.setPathProperties("fence", "f.txt", Map("k" -> "w"))) == Map("setXAttr" -> 1))
+    assert(calls(counted.pathStatus("fence", "f.txt")) == Map("getFileStatus" -> 1, "getXAttr" -> 1))
+    assert(calls(assert(counted.renamePath("fence", "f.txt", "g.txt"))) == Map("rename" -> 1))
+    assert(client.getPathProperties("fence", "g.txt") == Map("k" -> "w"))
+    assert(calls(assert(counted.deletePath("fence", "g.txt"))) == Map("delete" -> 1))
+    assert(calls(counted.createPath("fence", "h.txt")) == Map("create" -> 1))
+    assert(calls(counted.uploadString("fence", "h.txt", "y")) == Map("create" -> 1))
+    client.deleteFilesystem("fence")
+  }
+
+  test("setFilesystemProperties on a missing filesystem errors and writes nothing") {
+    def accountRoot = rootDir.toFile.list().toSet
+    val before = accountRoot
+    intercept[IllegalArgumentException] { client.setFilesystemProperties("ghost", Map("k" -> "v")) }
+    assert(accountRoot == before)
+    assert(client.getFilesystemProperties("ghost") == Map.empty)
+    assert(client.getPathProperties("ghost", "f.txt") == Map.empty)
+    assert(client.pathStatus("ghost", "f.txt").isEmpty)
   }
 
   test("listPathsPage makes one listing call per directory it walks and no status call") {

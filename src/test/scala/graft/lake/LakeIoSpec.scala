@@ -284,7 +284,7 @@ class LakeIoSpec extends AnyFunSuite with GraftSuite {
     for (i <- 0 until 15) client.uploadString("cat", f"d1/f$i%02d.txt", "x")
     for (i <- 0 until 15) client.uploadString("cat", f"d2/s$i%02d/leaf.txt", "yy")
     client.uploadString("cat", "root.txt", "zzz")
-    client.setPathProperties("cat", "root.txt", Map("k" -> "v")) // sidecar hidden
+    client.setPathProperties("cat", "root.txt", Map("k" -> "v")) // not a listed path
     val df = client.listPathsDF(spark, "cat")
     val fromDf = df.collect().map(r => (r.getString(0), r.getBoolean(1), r.getLong(2))).toSet
     val fromClient = client.listPaths("cat", maxResults = Int.MaxValue)

@@ -58,13 +58,12 @@ object LakeListingProperties extends Properties("LakeListing") {
     java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
   private def writable(p: String): Boolean = fileNames.newEncoder().canEncode(p)
 
-  /** Every path under the filesystem as java.nio reads the disk, sidecars
-    * excluded, relative to the filesystem root. */
+  /** Every path under the filesystem as java.nio reads the disk, relative
+    * to the filesystem root. */
   private def onDisk(client: LakeClient): Set[String] = {
     val root = java.nio.file.Paths.get(client.accountRoot.toUri.getPath, Fs)
     val walk = java.nio.file.Files.walk(root)
-    try walk.iterator().asScala.filter(_ != root).map(p => root.relativize(p).toString)
-      .filterNot(_.endsWith(LakeClient.PropsSuffix)).toSet
+    try walk.iterator().asScala.filter(_ != root).map(p => root.relativize(p).toString).toSet
     finally walk.close()
   }
 

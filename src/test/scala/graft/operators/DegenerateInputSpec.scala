@@ -161,7 +161,7 @@ class DegenerateInputSpec extends AnyFunSuite with GraftSuite {
     import graft.functions.Aggregators.weightedMean
     def agg(rows: Seq[(Option[Double], Option[Double])]): Double =
       rows.toDF("v", "w").agg(weightedMean(col("v"), col("w")).as("m"))
-        .head.getDouble(0)
+        .head().getDouble(0)
     assert(agg(Seq(Some(2.0) -> Some(1.0), Some(4.0) -> Some(3.0))) == 3.5)
     // NULL value or weight skips the row (avg()'s rule) — previously an
     // encoder/NumberFormat task kill

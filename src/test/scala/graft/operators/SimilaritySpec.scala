@@ -189,7 +189,7 @@ class SimilaritySpec extends AnyFunSuite with GraftSuite {
     val e = (0 until 40).flatMap { c =>
       val center = Array.fill(64)(rnd.nextGaussian().toFloat)
       (0 until 5).map(i => (c.toLong * 5 + i,
-        center.map(x => x + 0.0001f * i): Seq[Float]))
+        center.map(x => x + 0.0001f * i).toSeq))
     }.toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
     val out = Similarity.knnJoinGeom(e, k = 10, 64, Some((16, 4))).collect()
